@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.model.GraphModel
+import graft.ops.Stats
 import graft.sink.{ArrowIpcSink, FlightConfig, FlightSink, GdsSink, ParquetWireSink}
 import graft.sources.TableCatalog
 import org.apache.spark.sql.SparkSession
@@ -87,7 +88,17 @@ object Main {
     res.nodeStats.foreach(r => println(s"[graft] node stats: $r"))
     res.edgeStats.foreach(r => println(s"[graft] edge stats: $r"))
     println(s"[graft] final: ${res.finalStats}")
+    println(phasesLine(res))
     spark.stop()
+  }
+
+  /** The run report: rows, wire bytes and wall seconds per phase. */
+  private[graft] def phasesLine(res: GraphProjection.Result): String = {
+    def s(x: Double) = "%.3f s".formatLocal(java.util.Locale.ROOT, x)
+    val (n, e) = (Stats.fold(res.nodeStats, "node"), Stats.fold(res.edgeStats, "edge"))
+    s"[graft] phases: resolve ${s(res.resolveSeconds)}; " +
+      s"nodes ${n.count} rows, ${n.nbytes} B, ${s(res.nodesSeconds)}; " +
+      s"edges ${e.count} rows, ${e.nbytes} B, ${s(res.edgesSeconds)}"
   }
 
   /** FlightConfig from the CLI flags (reference client ctor,
