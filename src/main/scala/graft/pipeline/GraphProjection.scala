@@ -160,14 +160,16 @@ object GraphProjection {
     * The reference tolerates per-file dynamic schemas under one spec
     * (SURVEY §1.3): each spec reads with the merged schema of its files,
     * and every spec's schema comes from one footer job for the whole
-    * load — a file named by a node and an edge spec is read once. */
-  private def routedReads(
+    * load — a file named by a node and an edge spec is read once. Each
+    * scan is built from the routed statuses, so no file is globbed or
+    * listed again. */
+  private[graft] def routedReads(
       spark: SparkSession,
       specs: Seq[(String, Int, Seq[FileStatus])]): Seq[(Int, DataFrame)] = {
     val schemas = GraftFooters.mergeSchemas(spark, specs.map { case (l, _, fs) => l -> fs })
     specs.zip(schemas).map { case ((_, specIdx, fs), schema) =>
       specIdx -> GraphOps.tagProvenance(
-        spark.read.schema(schema).parquet(fs.map(_.getPath.toString): _*))
+        GraftFooters.read(spark, schema, fs))
     }
   }
 

@@ -4,27 +4,38 @@ import scala.collection.mutable
 import scala.util.Try
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
 import org.apache.spark.SparkException
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{caseInsensitiveResolution, caseSensitiveResolution}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /**
- * Merged Parquet schemas for several file groups from ONE footer-reading
- * Spark job — the algorithm of `ParquetFileFormat.mergeSchemasInParallel`
- * (what `spark.read.option("mergeSchema", "true")` runs), keyed by group.
+ * The routed Parquet reads of a graph load: merged schemas for several
+ * file groups from ONE footer-reading Spark job (`mergeSchemas`), then a
+ * scan over each group's files from the statuses routing already holds
+ * (`read`).
+ *
+ * `mergeSchemas` is the algorithm of
+ * `ParquetFileFormat.mergeSchemasInParallel` (what
+ * `spark.read.option("mergeSchema", "true")` runs), keyed by group.
  * Each distinct file's footer is read once even when several groups name
  * it; each task folds its files' schemas per group, and the driver folds
  * the partial schemas per group in file order. The job has
  * min(#files, defaultParallelism) tasks, so it scales with file count
  * like the per-read inference job it replaces.
  *
+ * `read` builds the relation `spark.read.schema(s).parquet(files)` would,
+ * without its glob and listing of files routing has just listed.
+ *
  * Lives in Spark's parquet package to reach the footer helpers
- * (`readParquetFootersInParallel`, `readSchemaFromFooter`) and
- * `StructType.merge`, as GraftArrow reaches Spark's Arrow writer.
+ * (`readParquetFootersInParallel`, `readSchemaFromFooter`),
+ * `StructType.merge` and the file index, as GraftArrow reaches Spark's
+ * Arrow writer.
  */
 object GraftFooters {
 
@@ -103,6 +114,36 @@ object GraftFooters {
       merged.getOrElse(g, throw new SparkException(
         s"no readable parquet footer among the files of ${labels(g)}"))
     }
+  }
+
+  /** A Parquet scan of `files` with data schema `schema` — the relation
+    * `spark.read.schema(schema).parquet(paths)` resolves to, over an
+    * `InMemoryFileIndex` whose status cache answers with `files`, so the
+    * read neither globs nor lists them again. */
+  def read(spark: SparkSession, schema: StructType, files: Seq[FileStatus]): DataFrame = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val byPath = files.map(f => f.getPath -> located(f, hadoopConf)).toMap
+    val routed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        byPath.get(path).map(Array(_))
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty, Some(schema), routed)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      schema.asNullable, bucketSpec = None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** `f` with its block locations, as Spark's file listing returns it, so
+    * scan tasks prefer the hosts that hold their blocks. (The short
+    * `LocatedFileStatus` constructor would read permissions, which is
+    * slow on the local file system.) */
+  private def located(f: FileStatus, conf: Configuration): FileStatus = f match {
+    case l: LocatedFileStatus => l
+    case _ =>
+      val blocks = f.getPath.getFileSystem(conf).getFileBlockLocations(f, 0, f.getLen)
+      new LocatedFileStatus(f.getLen, f.isDirectory, f.getReplication, f.getBlockSize,
+        f.getModificationTime, 0, null, null, null, null, f.getPath, blocks)
   }
 
   private def merge(

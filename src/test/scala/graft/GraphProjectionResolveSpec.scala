@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.model.{EdgeSpec, GraphModel, NodeSpec}
+import graft.ops.GraphOps
 import graft.pipeline.{GraphProjection, Main}
 import graft.sink.{FlightConfig, FlightSink, FlightTransport, ParquetWireSink}
 import org.apache.spark.{ListenerBusDrain, SparkException}
@@ -41,6 +42,29 @@ class GraphProjectionResolveSpec extends SparkTestBase {
     val res = GraphProjection.run(spark, model, Seq(s"$dir/customer"), Seq.empty,
       new ParquetWireSink(Files.createTempDirectory("graft_hidden_out").toString))
     assert(res.finalStats.count == 150)
+  }
+
+  test("each spec's scan reads exactly its routed files, hidden files excluded") {
+    val dir = Files.createTempDirectory("graft_routed").toString
+    for (t <- Seq("customer", "orders")) // Spark writes _SUCCESS and .crc files
+      spark.read.parquet(s"${sf()}/$t.parquet").repartition(3).write.parquet(s"$dir/$t")
+    val customer = GraphProjection.expandGlob(spark, s"$dir/customer")
+    val orders = GraphProjection.expandGlob(spark, s"$dir/orders")
+    assert(customer.size == 3 && orders.size == 3)
+    // a spec can own part of a directory: the second spec routes 2 of 3 files
+    val routed = Seq("customer" -> customer, "orders" -> orders.take(2))
+    val reads = GraphProjection.routedReads(spark,
+      routed.zipWithIndex.map { case ((t, fs), i) => (s"node spec $i ($t)", i, fs) })
+    assert(reads.map(_._1) == Seq(0, 1))
+    for (((t, fs), (_, df)) <- routed.zip(reads)) {
+      val paths = fs.map(_.getPath.toUri.toString)
+      assert(df.inputFiles.toSet == paths.toSet, t)
+      assert(df.inputFiles.forall(_.split('/').last.startsWith("part-")), df.inputFiles.toSeq)
+      val expected = spark.read.parquet(paths: _*)
+      assert(df.drop(GraphOps.SrcCol).schema == expected.schema, t)
+      assert(df.count() == expected.count(), t)
+      assert(df.select(GraphOps.SrcCol).distinct().as[String].collect().toSet == paths.toSet, t)
+    }
   }
 
   test("one load submits one footer job plus one job per routed spec") {

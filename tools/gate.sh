@@ -14,13 +14,24 @@
 # forwarded to graft.Verify — the sf0.1 heavy-query tier runs
 #   tools/gate.sh /root/testdata/sf0.1 tmp/verify_sf01 \
 #     CORRECTNESS_SELF_SF01.json "corpus_prepare,graph_betweenness,..."
+#
+# A filtered run checks a subset, so it never replaces the committed
+# full record: with a filter and the default record path, the subset
+# record goes to <out_dir>/CORRECTNESS_SUBSET.json instead. Name another
+# record path to write the subset there.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+FULL_RECORD=CORRECTNESS_SELF.json
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${2:-tmp/verify_gate}"
-RECORD="${3:-CORRECTNESS_SELF.json}"
+RECORD="${3:-$FULL_RECORD}"
 FILTER="${4:-}"
+
+if [[ -n "$FILTER" && "$(realpath -m "$RECORD")" == "$(realpath -m "$FULL_RECORD")" ]]; then
+  RECORD="$OUT_DIR/CORRECTNESS_SUBSET.json"
+  echo "[gate] query filter given: the subset record goes to $RECORD, not $FULL_RECORD"
+fi
 
 echo "[gate] verify dump: $SF_DIR -> $OUT_DIR (staged jar)"
 # staged jar (round-12 lesson): a concurrent `sbt compile` rewriting
