@@ -63,41 +63,29 @@ object Corpus {
    * executor storage is pinned. The driver-side fixpoint check on
    * sum(label) (labels only decrease ⇒ the sum is a monotone convergence
    * witness) rides on the write job itself via `Dataset.observe` — ONE
-   * job per iteration, no second scan. No row-level collect anywhere.
+   * job per iteration, no second scan. A pair table that fits the
+   * [[graft.ops.Pin]] gate skips the loop: one bounded collect, then a
+   * driver union-find.
    */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String = "a",
       bCol: String = "b",
-      maxIters: Int = 30,
-      smallGraphThreshold: Long = 1000000L): DataFrame = {
+      maxIters: Int = 30): DataFrame = {
     import graft.ops.Scratch
     // Small-graph fast path FIRST, as one bounded collect of the pair
-    // producer (Pin gate: rows AND bytes): a near-dup pair list is
-    // usually TINY relative to its corpus (it already survived LSH +
-    // verification), and the previous shape paid a scratch WRITE of the
-    // producer plus a second collect job for the union-find — the
-    // driver-local replay now costs exactly one job. Under the
-    // threshold (16 bytes/edge → ≤16 MB at the default) the union-find
-    // replaces O(diameter) distributed rounds — the same switchover
-    // production CC implementations use. Past either gate, the
-    // scratch-table loop below is the unchanged scale path (the pair
-    // producer is re-materialized there with the observed edge count
-    // riding the write, exactly as before).
+    // producer under the Pin gate (rows AND bytes): a near-dup pair list
+    // is usually TINY relative to its corpus (it already survived LSH +
+    // verification), and the union-find replaces O(diameter)
+    // distributed rounds — the same switchover production CC
+    // implementations use. Past the gate, the scratch-table loop below
+    // is the scale path.
     val p0 = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
     graft.ops.Pin.collectBounded(p0) match {
-      case Some(rows) if rows.length <= smallGraphThreshold =>
-        return driverUnionFindRows(pairs.sparkSession, rows, p0.schema)
-      case _ => ()
+      case Some(rows) => return unionFindLabels(pairs.sparkSession, rows, p0.schema)
+      case None => ()
     }
-    val (p, pm, pPath) = Scratch.materializeObservedAt(
-      p0, "cc_pairs", count(lit(1)).as("n_edges"))
-    val nEdges = pm("n_edges").asInstanceOf[Long]
-    if (nEdges <= smallGraphThreshold) {
-      val labels = driverUnionFind(p) // collects eagerly: p is done with
-      Scratch.drop(pairs.sparkSession, pPath)
-      return labels
-    }
+    val (p, pPath) = Scratch.materializeAt(p0, "cc_pairs")
     val edges = p.select(col("a").as("s"), col("b").as("d"))
       .union(p.select(col("b").as("s"), col("a").as("d")))
     // Convergence witness, generic over the id type: labels only ever
@@ -167,11 +155,8 @@ object Corpus {
     * for every orderable atomic type), and the returned (id, label)
     * columns carry the INPUT id type, never a coerced long. A non-numeric
     * id corpus therefore takes the same semantics on both sides of the
-    * small-graph threshold. Only reachable under the observed-size bound. */
-  private def driverUnionFind(p: DataFrame): DataFrame =
-    driverUnionFindRows(p.sparkSession, p.collect(), p.schema)
-
-  private def driverUnionFindRows(
+    * Pin gate. */
+  private def unionFindLabels(
       spark: org.apache.spark.sql.SparkSession,
       raw: Array[org.apache.spark.sql.Row],
       schema: org.apache.spark.sql.types.StructType): DataFrame = {

@@ -483,8 +483,7 @@ object Graph {
       srcCol: String = "src",
       dstCol: String = "dst",
       maxOuterRounds: Int = 20,
-      maxInnerRounds: Int = 40,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      maxInnerRounds: Int = 40): DataFrame = {
     import graft.ops.Scratch
     val spark = edges.sparkSession
     var (e, me, ePath) = Scratch.materializeObservedAt(
@@ -495,14 +494,13 @@ object Graph {
     // switchover): SCC output is CANONICAL (min member id), so a
     // driver Tarjan reproduces the FW-BW result exactly — and at
     // bench scale the FW-BW loop's ~40 write jobs are pure stage
-    // scheduling. Long ids only; maxLocalEdges=0 forces distributed.
-    val sccCap = localEdgeCap(spark, maxLocalEdges)
-    if (sccCap > 0 &&
-        me("n").asInstanceOf[Long] <= sccCap &&
-        e.schema("src").dataType == org.apache.spark.sql.types.LongType) {
-      val result = sccLocal(collectEdgePairs(e))
-      Scratch.drop(spark, ePath)
-      return longPairFrame(spark, result, "node", "scc_id")
+    // scheduling. Long ids only, under the Pin gate.
+    localEdgePairs(e, me("n").asInstanceOf[Long]) match {
+      case Some(pairs) =>
+        val result = sccLocal(pairs)
+        Scratch.drop(spark, ePath)
+        return longPairFrame(spark, result, "node", "scc_id")
+      case None =>
     }
     var (nodes, mn, nodesPath) = Scratch.materializeObservedAt(
       e.select(col("src").as("node"))
@@ -659,8 +657,7 @@ object Graph {
   def labelPropagation(
       edges: DataFrame,
       rounds: Int = 3,
-      weightCol: Option[String] = None,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      weightCol: Option[String] = None): DataFrame = {
     import graft.ops.Scratch
     require(rounds >= 1, "rounds must be >= 1")
     val spark = edges.sparkSession
@@ -685,22 +682,22 @@ object Graph {
     // always qualifies; co-occurrence counts qualify; fractional
     // weights keep the distributed loop).
     locally {
-      val cap = localEdgeCap(spark, maxLocalEdges)
-      val nRows = am("n_rows").asInstanceOf[Long]
       val wsumOk = am("wsum") match {
         case null => true
         case d: java.lang.Double =>
           d.doubleValue <= 4503599627370496.0d // 2^52
         case _ => false
       }
-      if (cap > 0 && nRows <= cap && wsumOk &&
+      if (wsumOk &&
           adj.schema("n").dataType == org.apache.spark.sql.types.LongType) {
-        val triples = adj.select(col("n"), col("x"), col("w")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        if (triples.forall(t => t._3 == math.floor(t._3) &&
-            math.abs(t._3) < 4503599627370496.0d)) {
-          Scratch.drop(spark, adjPath)
-          return lpaLocal(spark, triples, rounds)
+        graft.ops.Pin.collectObserved(adj.select(col("n"), col("x"), col("w")),
+            am("n_rows").asInstanceOf[Long])
+          .map(_.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))) match {
+          case Some(triples) if triples.forall(t => t._3 == math.floor(t._3) &&
+              math.abs(t._3) < 4503599627370496.0d) =>
+            Scratch.drop(spark, adjPath)
+            return lpaLocal(spark, triples, rounds)
+          case _ =>
         }
       }
     }
@@ -749,8 +746,7 @@ object Graph {
    * past the fixpoint, which is what makes the unrolled-round oracle
    * exact regardless of when each side stops.
    */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     import graft.ops.Scratch
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
@@ -762,12 +758,12 @@ object Graph {
     // peel is all-integer — degrees, the <k cut, the same round cap —
     // so the local replay is value-exact, and each distributed round's
     // TWO jobs (degree+anti-join write) collapse to array passes
-    val kcoreCap = localEdgeCap(spark, maxLocalEdges)
-    if (kcoreCap > 0 && n <= kcoreCap &&
-        e.schema("src").dataType == org.apache.spark.sql.types.LongType) {
-      val result = kCoreLocal(collectEdgePairs(e), k, maxRounds)
-      Scratch.drop(spark, ePath)
-      return longPairFrame(spark, result, "node", "degree")
+    localEdgePairs(e, n) match {
+      case Some(pairs) =>
+        val result = kCoreLocal(pairs, k, maxRounds)
+        Scratch.drop(spark, ePath)
+        return longPairFrame(spark, result, "node", "degree")
+      case None =>
     }
     var rounds = 0
     var converged = n == 0L
@@ -813,8 +809,7 @@ object Graph {
     * (no new sources) stops the loop without a second scan. Rounds cost
     * O(remaining edges) each; total work is O(maxRounds · |E|) worst
     * case, O(|E| · avg-depth) typically. */
-  def topoLayers(edges: DataFrame, maxRounds: Int = 8,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+  def topoLayers(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
@@ -824,13 +819,12 @@ object Graph {
     // observed-gated local Kahn replay (the louvain switchover): layer
     // = earliest wave is canonical up to the cap, and the peel loop's
     // per-wave write jobs are pure stage scheduling at bench scale
-    val topoCap = localEdgeCap(spark, maxLocalEdges)
-    if (topoCap > 0 &&
-        em("n").asInstanceOf[Long] <= topoCap &&
-        e.schema("src").dataType == org.apache.spark.sql.types.LongType) {
-      val result = topoLocal(collectEdgePairs(e), maxRounds)
-      Scratch.drop(spark, ePath)
-      return longNullableFrame(spark, result, "node", "layer")
+    localEdgePairs(e, em("n").asInstanceOf[Long]) match {
+      case Some(pairs) =>
+        val result = topoLocal(pairs, maxRounds)
+        Scratch.drop(spark, ePath)
+        return longNullableFrame(spark, result, "node", "layer")
+      case None =>
     }
     val (nodes, nodesPath) = Scratch.materializeAt(
       e.select(col("src").as("node"))
@@ -932,8 +926,7 @@ object Graph {
     * uncolored neighbor (everyone else colors), one anti-join each
     * shrinks the edge and node tables; all scratch-backed, the colored
     * count OBSERVED on each round's write. */
-  def greedyColoring(edges: DataFrame, maxRounds: Int = 8,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+  def greedyColoring(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
@@ -942,13 +935,12 @@ object Graph {
     // observed-gated local Jones-Plassmann replay (the louvain
     // switchover): identical waves, identical mex fold, and the
     // differential spec + sf0.01 oracle pin the equality
-    val colorCap = localEdgeCap(spark, maxLocalEdges)
-    if (colorCap > 0 &&
-        em("n").asInstanceOf[Long] <= colorCap &&
-        e.schema("src").dataType == org.apache.spark.sql.types.LongType) {
-      val result = coloringLocal(collectEdgePairs(e), maxRounds)
-      Scratch.drop(spark, ePath)
-      return longNullableFrame(spark, result, "node", "color")
+    localEdgePairs(e, em("n").asInstanceOf[Long]) match {
+      case Some(pairs) =>
+        val result = coloringLocal(pairs, maxRounds)
+        Scratch.drop(spark, ePath)
+        return longNullableFrame(spark, result, "node", "color")
+      case None =>
     }
     // full symmetric adjacency — the COLOR lookup runs against all
     // edges, not just the shrinking remainder
@@ -1083,8 +1075,7 @@ object Graph {
     * non-maximality is visible in-band, matched rows filter
     * `round IS NOT NULL`). Escape route: raise `maxRounds` (rounds
     * are O(log n) expected on non-adversarial orderings). */
-  def maximalMatching(edges: DataFrame, maxRounds: Int = 8,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+  def maximalMatching(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
@@ -1093,24 +1084,23 @@ object Graph {
     // observed-gated local replay of the synchronous rounds (the
     // louvain switchover): same both-ends-minimal waves under the
     // canonical order, same null-round residual contract
-    val matchCap = localEdgeCap(spark, maxLocalEdges)
-    if (matchCap > 0 &&
-        em0("n").asInstanceOf[Long] <= matchCap &&
-        e.schema("src").dataType == org.apache.spark.sql.types.LongType) {
-      val result = matchingLocal(collectEdgePairs(e), maxRounds)
-      Scratch.drop(spark, ePath)
-      val jrows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(result.map(r =>
-          org.apache.spark.sql.Row(r._1, r._2,
-            r._3.map(Long.box).orNull)): _*)
-      return spark.createDataFrame(jrows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("src",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("dst",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("round",
-            org.apache.spark.sql.types.LongType, nullable = true))))
+    localEdgePairs(e, em0("n").asInstanceOf[Long]) match {
+      case Some(pairs) =>
+        val result = matchingLocal(pairs, maxRounds)
+        Scratch.drop(spark, ePath)
+        val jrows: java.util.List[org.apache.spark.sql.Row] =
+          java.util.Arrays.asList(result.map(r =>
+            org.apache.spark.sql.Row(r._1, r._2,
+              r._3.map(Long.box).orNull)): _*)
+        return spark.createDataFrame(jrows,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("src",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("dst",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("round",
+              org.apache.spark.sql.types.LongType, nullable = true))))
+      case None =>
     }
     val matched = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
@@ -1240,8 +1230,7 @@ object Graph {
    * no windows, no driver iteration, constant-size plans. Peeling is
    * idempotent past the fixpoint (the unrolled-round oracle contract).
    */
-  def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 30,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     import graft.ops.Scratch
     require(k >= 3, "k must be >= 3")
     require(maxRounds >= 1, "maxRounds must be >= 1")
@@ -1257,23 +1246,23 @@ object Graph {
     // writes collapse to in-memory set intersections. Round 13 measured
     // the per-round fanOutByKey variant a net LOSS here (shrinking peel
     // rounds); the local replay removes the rounds altogether.
-    val trussCap = localEdgeCap(spark, maxLocalEdges)
-    if (trussCap > 0 && n <= trussCap &&
-        e.schema("src").dataType == org.apache.spark.sql.types.LongType) {
-      val result = kTrussLocal(collectEdgePairs(e), minSup, maxRounds)
-      Scratch.drop(spark, ePath)
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(result.map { case (s, d, sup) =>
-          org.apache.spark.sql.Row(s, d, sup)
-        }: _*)
-      return spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("src",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("dst",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("support",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    localEdgePairs(e, n) match {
+      case Some(pairs) =>
+        val result = kTrussLocal(pairs, minSup, maxRounds)
+        Scratch.drop(spark, ePath)
+        val rows: java.util.List[org.apache.spark.sql.Row] =
+          java.util.Arrays.asList(result.map { case (s, d, sup) =>
+            org.apache.spark.sql.Row(s, d, sup)
+          }: _*)
+        return spark.createDataFrame(rows,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("src",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("dst",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("support",
+              org.apache.spark.sql.types.LongType, nullable = false))))
+      case None =>
     }
     var rounds = 0
     var converged = n == 0L
@@ -1564,12 +1553,11 @@ object Graph {
   def harmonicCentrality(
       edges: DataFrame,
       maxHops: Int = 3,
-      sources: Option[DataFrame] = None,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
     val (adj, nAdj, adjPath) = symAdjacency(edges, "harm")
-    tryLocalBalls(adj, nAdj, sources, maxLocalEdges) match {
+    tryLocalBalls(adj, nAdj, sources) match {
       case Some(g) =>
         // driver-local replay: Σ over reached t of the SAME 9-dp term
         // under an exact decimal sum, one accumulator per source —
@@ -1617,12 +1605,11 @@ object Graph {
   def closenessCentrality(
       edges: DataFrame,
       maxHops: Int = 3,
-      sources: Option[DataFrame] = None,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
     val (adj, nAdj, adjPath) = symAdjacency(edges, "close")
-    tryLocalBalls(adj, nAdj, sources, maxLocalEdges) match {
+    tryLocalBalls(adj, nAdj, sources) match {
       case Some(g) =>
         // driver-local replay: integer reached/dist sums + the same
         // one 6-dp division — bit-exact by construction
@@ -1696,14 +1683,13 @@ object Graph {
   def betweennessCentrality(
       edges: DataFrame,
       maxHops: Int = 3,
-      sources: Option[DataFrame] = None,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      sources: Option[DataFrame] = None): DataFrame = {
     import graft.ops.Scratch
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val (adj, nAdj, adjPath) = symAdjacency(edges, "btw")
-    tryLocalBalls(adj, nAdj, sources, maxLocalEdges) match {
+    tryLocalBalls(adj, nAdj, sources) match {
       case Some(g) =>
         // driver-local Brandes replay: per source, forward BFS with
         // integer σ then backward δ levels using the SAME IEEE term
@@ -1868,8 +1854,8 @@ object Graph {
     * peel paths' footprint — and the collect is bounded by the
     * OBSERVED adjacency row count, never by hope.
     *
-    * Gate: adjacency rows ≤ the [[localEdgeCap]] (conf-overridable,
-    * 0 disables), Long ids, an EXPLICIT landmark frame (`sources` =
+    * Gate: the adjacency fits [[graft.ops.Pin]] (its observed row count
+    * and bytes), Long ids, an EXPLICIT landmark frame (`sources` =
     * None keeps the distributed loop — all-sources on a dense graph is
     * the documented Θ(V·V) ball regime either way), ≤ 100k seeds, and
     * a |S|·|adj| work budget so a large landmark set on a near-cap
@@ -1877,27 +1863,25 @@ object Graph {
   private def tryLocalBalls(
       adjDf: DataFrame,
       nAdj: Long,
-      sources: Option[DataFrame],
-      maxLocalEdges: Long): Option[LocalBalls] = {
-    val spark = adjDf.sparkSession
-    val cap = localEdgeCap(spark, maxLocalEdges)
-    if (cap <= 0 || nAdj > cap || sources.isEmpty ||
-        adjDf.schema("src").dataType != org.apache.spark.sql.types.LongType)
-      return None
+      sources: Option[DataFrame]): Option[LocalBalls] = {
+    if (sources.isEmpty) return None
     val src = sources.get
     val seeds0 = src.select(col(src.columns.head).as("s")).distinct()
     if (seeds0.schema("s").dataType != org.apache.spark.sql.types.LongType)
       return None
     val seedCap = 100000
-    val seedArr = seeds0.limit(seedCap + 1).collect().map(_.getLong(0))
-    if (seedArr.length > seedCap) return None
-    if (seedArr.length.toLong * nAdj > 512000000L) return None
-    val (ids, adj, idx) = indexPairs(collectEdgePairs(adjDf))
-    // landmark ids absent from the graph drop (no edges → no ball),
-    // matching the distributed seed semi-join; sorted for reproducible
-    // processing order (the sums are order-exact regardless)
-    val seeds = seedArr.filter(idx.containsKey(_)).sorted.map(idx.get(_))
-    Some(LocalBalls(ids, adj, seeds))
+    localEdgePairs(adjDf, nAdj).flatMap { pairs =>
+      val seedArr = seeds0.limit(seedCap + 1).collect().map(_.getLong(0))
+      if (seedArr.length > seedCap || seedArr.length.toLong * nAdj > 512000000L) None
+      else {
+        val (ids, adj, idx) = indexPairs(pairs)
+        // landmark ids absent from the graph drop (no edges → no ball),
+        // matching the distributed seed semi-join; sorted for reproducible
+        // processing order (the sums are order-exact regardless)
+        val seeds = seedArr.filter(idx.containsKey(_)).sorted.map(idx.get(_))
+        Some(LocalBalls(ids, adj, seeds))
+      }
+    }
   }
 
   /** Int-index a collected (src, dst) pair table: (sorted node ids,
@@ -1924,15 +1908,11 @@ object Graph {
     * State is O(V + E); nothing O(iterations·E) ever materializes. */
   private def tryLocalPairs(
       adjDf: DataFrame,
-      nPairs: Long,
-      maxLocalEdges: Long): Option[(Array[Long], Array[Array[Int]])] = {
-    val cap = localEdgeCap(adjDf.sparkSession, maxLocalEdges)
-    if (cap <= 0 || nPairs > cap ||
-        adjDf.schema("src").dataType != org.apache.spark.sql.types.LongType)
-      return None
-    val (ids, adj, _) = indexPairs(collectEdgePairs(adjDf))
-    Some((ids, adj))
-  }
+      nPairs: Long): Option[(Array[Long], Array[Array[Int]])] =
+    localEdgePairs(adjDf, nPairs).map { pairs =>
+      val (ids, adj, _) = indexPairs(pairs)
+      (ids, adj)
+    }
 
   /** Driver-local synchronous LPA replay for [[labelPropagation]]'s
     * gated fast path: Long vote tallies (exactly the distributed
@@ -2323,12 +2303,11 @@ object Graph {
   def distanceDistribution(
       edges: DataFrame,
       maxHops: Int = 3,
-      sources: Option[DataFrame] = None,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
     val (adj, nAdj, adjPath) = symAdjacency(edges, "dd")
-    tryLocalBalls(adj, nAdj, sources, maxLocalEdges) match {
+    tryLocalBalls(adj, nAdj, sources) match {
       case Some(g) =>
         // driver-local replay: an all-integer hop histogram — only
         // hop values that actually occur emit rows, like the groupBy
@@ -2381,15 +2360,14 @@ object Graph {
    * superseded tables retired eagerly, nothing broadcast that is
    * O(graph).
    */
-  def eigenvectorCentrality(edges: DataFrame, iters: Int = 3,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+  def eigenvectorCentrality(edges: DataFrame, iters: Int = 3): DataFrame = {
     import graft.ops.Scratch
     require(iters >= 1, "iters must be >= 1")
     val spark = edges.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val e0 = canonicalEdges(edges)
     val (adj, nAdj, adjPath) = symAdjacency(edges, "eig")
-    tryLocalPairs(adj, nAdj, maxLocalEdges).foreach { case (ids, ladj) =>
+    tryLocalPairs(adj, nAdj).foreach { case (ids, ladj) =>
       // driver-local replay of the L1-normalized rounds: same 9-dp
       // terms under exact decimal sums, same normalizer, same one
       // IEEE division + 9-dp round per node per round
@@ -2469,8 +2447,7 @@ object Graph {
    * + keyed aggregate of 9-dp-rounded terms under a DECIMAL(28,12)
    * sum, materialized with the L1 normalizer riding the write.
    */
-  def hits(edges: DataFrame, iters: Int = 3,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+  def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     import graft.ops.Scratch
     require(iters >= 1, "iters must be >= 1")
     val spark = edges.sparkSession
@@ -2479,7 +2456,7 @@ object Graph {
       edges.filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst")).distinct(),
       "hits_adj", count(lit(1)).as("n"))
-    tryLocalPairs(adj, am("n").asInstanceOf[Long], maxLocalEdges)
+    tryLocalPairs(adj, am("n").asInstanceOf[Long])
       .foreach { case (ids, fwd) =>
         // driver-local replay of the mutual half-rounds: auth pulls
         // through forward edges from hub, hub pulls through REVERSED
@@ -2869,8 +2846,7 @@ object Graph {
       dims: Int = 8,
       iterations: Int = 2,
       iterationWeights: Seq[Double] = Seq(1.0, 1.0),
-      salt: String = "frp",
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      salt: String = "frp"): DataFrame = {
     import graft.ops.Scratch
     require(dims >= 1, "dims must be >= 1")
     require(iterations >= 1, "iterations must be >= 1")
@@ -2891,16 +2867,16 @@ object Graph {
     // IEEE ops (one division by the integer degree, one sqrt, the
     // md5-coin init) — all bit-replayable; budget counts edge·dim work
     locally {
-      val cap = localEdgeCap(spark, maxLocalEdges)
       val nRows = am("n_rows").asInstanceOf[Long]
-      if (cap > 0 && nRows <= cap &&
-          nRows * dims * iterations <= 512000000L &&
+      if (nRows * dims * iterations <= 512000000L &&
           adj.schema("n").dataType == org.apache.spark.sql.types.LongType) {
-        val pairs = adj.select(col("n"), col("x")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        Scratch.drop(spark, adjPath)
-        return fastRpLocal(spark, pairs, dims, iterations,
-          iterationWeights, salt)
+        graft.ops.Pin.collectObserved(adj.select(col("n"), col("x")), nRows) match {
+          case Some(rows) =>
+            Scratch.drop(spark, adjPath)
+            return fastRpLocal(spark, rows.map(r => (r.getLong(0), r.getLong(1))),
+              dims, iterations, iterationWeights, salt)
+          case None =>
+        }
       }
     }
     val coin = conv(substring(md5(concat_ws(":", lit(salt),
@@ -3010,8 +2986,7 @@ object Graph {
       edges: DataFrame,
       maxRounds: Int = 4,
       weightCol: Option[String] = None,
-      levels: Int = 1,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      levels: Int = 1): DataFrame = {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
     require(levels >= 1, "levels must be >= 1")
@@ -3045,7 +3020,7 @@ object Graph {
     // one phase of half-sweep local moves over (cross-edges e, self
     // mass sw); returns the phase's label table (node → community).
     // `nEdges`/`nSelf` are the OBSERVED row counts of the two inputs
-    // (riding their write jobs): under `maxLocalEdges` the phase runs
+    // (riding their write jobs): under the Pin gate the phase runs
     // as a driver-local sweep loop — the [[Corpus.connectedComponents]]
     // union-find switchover, and exactly what production Louvain does
     // once contraction shrinks the graph (level 2+ graphs are
@@ -3055,17 +3030,14 @@ object Graph {
     // DECIMAL(38,0)), same snapshot semantics, same (gain, -c)
     // tie-break — value-identical by construction, differential-spec
     // enforced, and the collect is bounded by the observed counts,
-    // never by hope. Long-typed node ids only; anything else (or
-    // maxLocalEdges = 0, the spec's override) takes the distributed
-    // scratch-table loop.
+    // never by hope. Long-typed node ids only; anything else (or a
+    // frame past the Pin gate) takes the distributed scratch-table loop.
     def phase(e: DataFrame, sw: DataFrame,
         nEdges: Long, nSelf: Long): (DataFrame, String) = {
-      val phaseCap = localEdgeCap(spark, maxLocalEdges)
-      if (phaseCap > 0 && nEdges <= phaseCap &&
-          nSelf <= phaseCap &&
-          e.schema("src").dataType ==
-            org.apache.spark.sql.types.LongType)
-        return (louvainLocalPhase(e, sw, m2, maxRounds), null)
+      louvainLocalPhase(e, sw, nEdges, nSelf, m2, maxRounds) match {
+        case Some(labels) => return (labels, null)
+        case None =>
+      }
       val (adj, adjPath) = Scratch.materializeAt(
         e.select(col("src").as("n"), col("dst").as("x"), col("w"))
           .union(e.select(col("dst").as("n"), col("src").as("x"), col("w"))),
@@ -3238,8 +3210,9 @@ object Graph {
     map
   }
 
-  /** Driver-local rendition of one [[louvain]] phase — reachable ONLY
-    * under the observed `maxLocalEdges` gate. Replays the distributed
+  /** Driver-local rendition of one [[louvain]] phase when both inputs
+    * fit the Pin gate under their observed row counts (None otherwise,
+    * or for non-Long ids). Replays the distributed
     * phase exactly: identity start, rounds of two snapshot half-sweeps
     * (odd ids then even ids, moves computed against the half-sweep's
     * INPUT labels), gain = m2·k_{i,C} − k_i·(Σtot(C) − [C=C₀]·k_i) as
@@ -3249,15 +3222,21 @@ object Graph {
     * commutative integer sums, so map iteration order cannot leak into
     * the result — value-identical to the scratch-table loop by
     * construction (LouvainLocalSpec runs both paths differentially). */
-  private def louvainLocalPhase(
-      e: DataFrame, sw: DataFrame, m2: Long, maxRounds: Int): DataFrame = {
+  private def louvainLocalPhase(e: DataFrame, sw: DataFrame,
+      nEdges: Long, nSelf: Long, m2: Long, maxRounds: Int): Option[DataFrame] = {
     import scala.collection.mutable
+    if (e.schema("src").dataType != org.apache.spark.sql.types.LongType)
+      return None
+    val collected = for {
+      es <- graft.ops.Pin.collectObserved(e.select(col("src"), col("dst"), col("w")), nEdges)
+      ss <- graft.ops.Pin.collectObserved(sw.select(col("node"), col("selfw")), nSelf)
+    } yield (es, ss)
+    if (collected.isEmpty) return None
     val spark = e.sparkSession
-    val edgeRows = e.select(col("src"), col("dst"), col("w")).collect()
+    val edgeRows = collected.get._1
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val selfw = mutable.LongMap.empty[Long]
-    sw.select(col("node"), col("selfw")).collect()
-      .foreach(r => selfw(r.getLong(0)) = r.getLong(1))
+    collected.get._2.foreach(r => selfw(r.getLong(0)) = r.getLong(1))
     val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long)]]
     val kw = mutable.LongMap.empty[Long]
     for ((s, d, w) <- edgeRows) {
@@ -3324,44 +3303,18 @@ object Graph {
       if (s2 > s) { labels = h2; s = s2; round += 1 }
       else improving = false
     }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(nodes.sorted.map(n =>
-        org.apache.spark.sql.Row(n, labels(n))): _*)
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("label",
-        org.apache.spark.sql.types.LongType, nullable = false))))
+    Some(longPairFrame(spark, nodes.sorted.map(n => (n, labels(n))).toSeq,
+      "node", "label"))
   }
 
-  /** Default edge bound for the driver-local graph fast paths (SCC /
-    * toposort / coloring / matching / Louvain phases): a graph whose
-    * OBSERVED edge count fits the bound is collected and solved on the
-    * driver (~16 bytes/edge → ≈16 MB of driver heap at the default),
-    * which at bench scale replaces dozens of pure-stage-scheduling
-    * write jobs. DRIVER-MEMORY IMPLICATION: callers with small driver
-    * heaps — or deployments that never want driver-local execution —
-    * tune it globally via the session conf `spark.graft.maxLocalEdges`
-    * (`0` disables every fast path); an explicit per-call
-    * `maxLocalEdges` argument that differs from this default always
-    * wins over the conf. The distributed loops remain the semantics of
-    * record either way (differential specs pin local ≡ distributed). */
-  val DefaultMaxLocalEdges: Long = 1000000L
-
-  /** Resolve a call's effective driver-local edge cap: the explicit
-    * argument if the caller changed it, else the session conf
-    * `spark.graft.maxLocalEdges`, else [[DefaultMaxLocalEdges]]. */
-  private def localEdgeCap(
-      spark: org.apache.spark.sql.SparkSession, requested: Long): Long =
-    if (requested != DefaultMaxLocalEdges) requested
-    else spark.conf.getOption("spark.graft.maxLocalEdges")
-      .map(_.toLong).getOrElse(DefaultMaxLocalEdges)
-
-  /** Collect a (src, dst) scratch edge table for a driver-local graph
-    * fast path — callers gate on the OBSERVED edge count first. */
-  private def collectEdgePairs(e: DataFrame): Array[(Long, Long)] =
-    e.select(col("src"), col("dst")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+  /** The (src, dst) pairs of a Long-id scratch edge table when
+    * [[graft.ops.Pin]] admits it under its observed row count, else
+    * None (other id types keep the distributed loop). */
+  private def localEdgePairs(e: DataFrame, observedRows: Long)
+      : Option[Array[(Long, Long)]] =
+    if (e.schema("src").dataType != org.apache.spark.sql.types.LongType) None
+    else graft.ops.Pin.collectObserved(e.select(col("src"), col("dst")), observedRows)
+      .map(_.map(r => (r.getLong(0), r.getLong(1))))
 
   private def longPairFrame(
       spark: org.apache.spark.sql.SparkSession,
@@ -4202,8 +4155,7 @@ object Graph {
    * O(graph).
    */
   def katzCentrality(
-      edges: DataFrame, alpha: Double = 0.05, iters: Int = 3,
-      maxLocalEdges: Long = DefaultMaxLocalEdges): DataFrame = {
+      edges: DataFrame, alpha: Double = 0.05, iters: Int = 3): DataFrame = {
     import graft.ops.Scratch
     require(iters >= 1, "iters must be >= 1")
     require(alpha > 0.0d && alpha < 1.0d, "alpha must be in (0, 1)")
@@ -4211,7 +4163,7 @@ object Graph {
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val e0 = canonicalEdges(edges)
     val (adj, nAdj, adjPath) = symAdjacency(edges, "katz")
-    tryLocalPairs(adj, nAdj, maxLocalEdges).foreach { case (ids, ladj) =>
+    tryLocalPairs(adj, nAdj).foreach { case (ids, ladj) =>
       // driver-local replay: same decimal contribution rounds; every
       // node keeps a score each round (the left-join semantics —
       // no-contribution nodes take coalesce(·, 0.0))

@@ -737,6 +737,8 @@ object Similarity {
     val upperAgg =
       Par.fanOut(vecs.select(col(vecCol).as("v"))).crossJoin(muRow)
         .select(cArr.as("c"))
+        // a zero-length row emits no cells (sequence(0, -1) descends)
+        .filter(size(col("c")) > 0)
         .select(explode(flatten(transform(
           sequence(lit(0), size(col("c")) - 1), i =>
             transform(sequence(i, size(col("c")) - 1), j =>
@@ -1883,7 +1885,7 @@ object Similarity {
     val ent = vecs.select(col("id")).orderBy(col("id").asc).limit(2)
       .agg(min(col("id")).as("m1"), max(col("id")).as("m2"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    var cur = pinFrontier(
+    var cur = graft.ops.Pin.state(
       q.crossJoin(broadcast(ent))
         .select(col("query_id"), col("qv"),
           when(col("query_id") === col("m1"), col("m2"))
@@ -1891,7 +1893,7 @@ object Similarity {
         .join(vecs, col("node") === col("id"))
         .select(col("query_id"), col("qv"), col("node"),
           round(cosine(col("qv"), col("v")), 6).as("sim")),
-      "nsw_hop0")
+      "nsw_hop0_frontier")
     val (_, hopFrames) = greedyWalk(cur, edges, vecs, maxHops, "nsw")
     val hops = cur.select(col("query_id"), lit(0).as("hop"),
       col("node").as("node_id"), col("sim")) +:
@@ -1915,7 +1917,7 @@ object Similarity {
       vecs: DataFrame,
       hops: Int,
       tag: String): (DataFrame, Seq[DataFrame]) = {
-    var cur = pinFrontier(start, tag)
+    var cur = graft.ops.Pin.state(start, s"${tag}_frontier")
     val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (h <- 1 to hops) {
       val frontier = edges.join(broadcast(cur), col("node") === col("src"))
@@ -1930,30 +1932,15 @@ object Similarity {
       // the graph degree, never by corpus size
       val w = Window.partitionBy("query_id")
         .orderBy(col("csim").desc, col("cnode").asc)
-      cur = pinFrontier(
+      cur = graft.ops.Pin.state(
         scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select(col("query_id"), col("qv"), col("cnode").as("node"),
             col("csim").as("sim")),
-        tag)
+        s"${tag}_frontier")
       frames += cur
     }
     (cur, frames.toSeq)
   }
-
-  /** Pin a greedy-walk frontier on the driver: ONE bounded collect per
-    * hop instead of a scratch parquet write + read-back. The frontier
-    * is ≤ |queries| rows by construction (one argmax row per query —
-    * the broadcast-the-queries contract this whole operator family
-    * assumes), the same bounded-driver-state class as the pinned
-    * centroid/codebook collects; values round-trip exactly (binary64
-    * rows into a local relation, no re-rounding). The bound is
-    * ENFORCED, not assumed — and BYTE-aware, because frontier rows
-    * carry the full query vector: [[graft.ops.Pin.state]] gates on
-    * `spark.graft.maxLocalEdges` rows AND
-    * `spark.graft.maxLocalStateBytes` (default 64 MB), falling back to
-    * the scratch-table materialization, the distributed shape. */
-  private def pinFrontier(df: DataFrame, tag: String): DataFrame =
-    graft.ops.Pin.state(df, s"${tag}_frontier")
 
   /** HIERARCHICAL graph ANN — the full HNSW search shape (Malkov &
     * Yashunin 2016): a sparse UPPER layer (nodes where the 60-bit md5
@@ -1998,7 +1985,7 @@ object Similarity {
     val ent = upper.select(col(idCol).as("id")).orderBy(col("id").asc)
       .limit(2).agg(min(col("id")).as("m1"), max(col("id")).as("m2"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cur1 = pinFrontier(
+    val cur1 = graft.ops.Pin.state(
       q.crossJoin(broadcast(ent))
         .select(col("query_id"), col("qv"),
           when(col("query_id") === col("m1"), col("m2"))
@@ -2006,7 +1993,7 @@ object Similarity {
         .join(vecs, col("node") === col("id"))
         .select(col("query_id"), col("qv"), col("node"),
           round(cosine(col("qv"), col("v")), 6).as("sim")),
-      "hnsw_l1h0")
+      "hnsw_l1h0_frontier")
     val (term1, l1Frames) = greedyWalk(cur1, edges1, vecs, maxHops1, "hnsw_l1")
     val (_, l0Frames) = greedyWalk(term1, edges0, vecs, maxHops0, "hnsw_l0")
     val rows =

@@ -351,9 +351,9 @@ object TextAnalysis {
       .select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    // Driver-local replay gate (the driverUnionFind / fastRpLocal
-    // switchover): classic BPE training is vocabulary-sized, not
-    // corpus-sized — under the shared Pin row/byte gate the whole merge
+    // Driver-local replay gate (the connected-components union-find /
+    // fastRpLocal switchover): classic BPE training is vocabulary-sized,
+    // not corpus-sized — under the shared Pin row/byte gate the whole merge
     // loop runs on the collected (word, cnt) table in exact long
     // arithmetic with Spark's own orderings replicated (UTF-8 byte
     // order for the pair tie-break, code-point symbol splitting), so
@@ -1276,15 +1276,16 @@ object TextAnalysis {
     // past the Pin gate) BEFORE the single-char/top-k union: left lazy,
     // both union branches re-run the occurrence explode + aggregate —
     // one full pass wasted (§1.2). Same below for each round's ec.
-    val seedCounts = graft.ops.Pin.state(
+    val (seedCounts, seedPath) = graft.ops.Pin.stateAt(
       occ.groupBy(col("piece")).agg(sum(col("cnt")).as("c0")), "ulm_seed")
     val seed = seedCounts.filter(length(col("piece")) === 1)
       .unionByName(seedCounts.filter(length(col("piece")) > 1)
         .orderBy(col("c0").desc, col("piece").asc).limit(seedMulti))
     // the vocabulary state is keepMulti + |chars| rows — driver-pinned
-    // per round (enforced row/byte gate; the over-bound fallback is the
-    // scratch table, reclaimed at session end)
-    var vocab = graft.ops.Pin.state(
+    // per round (enforced row/byte gate). Past the gate each round's
+    // scratch tables are dropped as soon as the next state is written,
+    // so only the returned vocabulary's table outlives the call.
+    var (vocab, vocabPath) = graft.ops.Pin.stateAt(
       seed.crossJoin(broadcast(seed.agg(sum(col("c0")).as("tot"))))
         .select(col("piece"),
           greatest(
@@ -1292,6 +1293,7 @@ object TextAnalysis {
             lit(1e-12d)).as("p"),
           lit(null).cast("decimal(38,12)").as("ec")),
       "ulm_vocab")
+    Scratch.drop(spark, seedPath)
     for (_ <- 1 to emRounds) {
       // per-word piece→prob map (word-length×L entries, bounded)
       val pm = occ.select(col("word"), col("piece")).distinct()
@@ -1342,7 +1344,7 @@ object TextAnalysis {
       // vocab state all read the (vocab-sized) expectation table — left
       // lazy, each reader re-runs the forward-backward explode over the
       // whole word table (the expensive subtree of the round)
-      val ec = graft.ops.Pin.state(
+      val (ec, ecPath) = graft.ops.Pin.stateAt(
         terms.groupBy(col("piece"))
           .agg(sum(col("term").cast("decimal(38,12)")).as("ec")), "ulm_ec")
       val scored = ec
@@ -1354,8 +1356,11 @@ object TextAnalysis {
       val kept = scored.filter(length(col("piece")) === 1)
         .unionByName(scored.filter(length(col("piece")) > 1)
           .orderBy(col("ec").desc, col("piece").asc).limit(keepMulti))
-      vocab = graft.ops.Pin.state(
+      val (next, nextPath) = graft.ops.Pin.stateAt(
         kept.select(col("piece"), col("p"), col("ec")), "ulm_vocab")
+      Scratch.drop(spark, ecPath)
+      Scratch.drop(spark, vocabPath)
+      vocab = next; vocabPath = nextPath
     }
     Scratch.drop(spark, wordsPath)
     vocab.select(col("piece"), length(col("piece")).cast("int").as("piece_len"),

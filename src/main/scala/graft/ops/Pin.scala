@@ -1,50 +1,46 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{DataFrame, GraftPlanApi, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
+import org.apache.spark.sql.types.StructType
 
 /**
- * Driver-pinned iteration state: ONE bounded collect per loop round
- * instead of a scratch parquet write + read-back.
+ * The one driver-placement gate: whether a frame lives on the driver
+ * (a local relation, or rows for a driver-local replay) or stays
+ * distributed (a scratch table, or the caller's distributed loop).
  *
- * Iterative operators (greedy ANN walks, random-walk frontiers,
- * per-round rank/vocabulary tables) keep per-round state that is tiny
- * by construction — one row per query/walk/piece — while their plans
- * must stay constant-size across rounds. The scratch-table loop
- * discipline achieves that with a write+read per round; pinning
- * achieves it with a collect into a local relation, saving the file
- * round-trip and its commit/listing overhead. Values round-trip
- * exactly: collected external rows (boxed longs/doubles/decimals/
- * strings/arrays) re-enter the plan bit-identical via
- * `createDataFrame`, no re-rounding anywhere.
+ * Iterative operators keep per-round state that is small by
+ * construction (one row per query/walk/piece), and the graph
+ * operators replay small graphs on the driver. Pinning such state is
+ * one bounded collect instead of a scratch parquet write + read-back;
+ * values stay exact, because the collected UnsafeRows become the local
+ * relation's rows as they are.
  *
- * The bound is ENFORCED, not assumed, and it is BYTE-aware (the
- * round-13 advisory: a row bound calibrated for 16-byte edges admits
- * multi-GB collects when rows carry embedding vectors):
+ * The bound is one conf pair, read per call:
  *
- *  - rows: `spark.graft.maxLocalEdges` (default 1M — the shared
- *    driver-local gate used by the graph fast paths);
- *  - bytes: `spark.graft.maxLocalStateBytes` (default 64 MB).
+ *  - rows: `spark.graft.maxLocalEdges` (default 1M);
+ *  - bytes: `spark.graft.maxLocalStateBytes` (default 64 MB), the exact
+ *    sum of the collected rows' UnsafeRow sizes.
  *
- * The fetch cap is derived BEFORE collecting: fixed-width schemas get
- * an exact per-row width; variable-width schemas (strings, arrays)
- * probe one row once per schema (cached per JVM) and size from it.
- * After the collect the ACTUAL bytes are re-checked, so a skewed
- * probe row can only cost a wasted collect, never an unbounded one.
- * Past either bound the state falls back to
- * [[Scratch.materialize]] — the distributed shape (the fallback
- * recomputes the plan; it is the rare path by construction).
+ * `0` in either one keeps every frame distributed. The collect is one
+ * job over the executed plan. Each partition copies its UnsafeRows and
+ * stops as soon as it passes either bound, so the driver receives at
+ * most one bound's worth of rows (plus one row) per partition; it
+ * admits the result only when the totals fit both bounds. Pin writes
+ * no session conf.
  */
 object Pin {
 
   val DefaultMaxRows: Long = 1000000L
   val DefaultMaxBytes: Long = 64L * 1024 * 1024
-
-  /** One probed per-row width per schema per JVM: loops re-pin the
-    * same-shaped state every round; only the first round pays the
-    * 1-row probe job. */
-  private val widthCache =
-    new java.util.concurrent.ConcurrentHashMap[StructType, Long]()
 
   def state(df: DataFrame, tag: String): DataFrame = stateAt(df, tag)._1
 
@@ -55,96 +51,91 @@ object Pin {
     * per-round state is exactly the table one must not leak
     * O(iterations) copies of. */
   def stateAt(df: DataFrame, tag: String): (DataFrame, String) =
-    collectBounded(df) match {
+    collectRows(df) match {
       case Some(rows) =>
-        import scala.jdk.CollectionConverters._
-        (df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema), null)
+        val local = LocalRelation(DataTypeUtils.toAttributes(df.schema),
+          ArraySeq.unsafeWrapArray(rows))
+        (GraftPlanApi.ofRows(df.sparkSession, local), null)
       case None => Scratch.materializeAt(df, s"${tag}_state")
     }
 
-  /** The bounded collect behind [[state]], exposed for driver-local
-    * fast paths that want the raw rows (the driverUnionFind /
-    * fastRpLocal switchover pattern): Some(rows) when the frame fits
-    * BOTH gates, None when the caller must stay distributed. */
-  def collectBounded(df: DataFrame): Option[Array[Row]] = {
-    val spark = df.sparkSession
-    val rowBound = spark.conf.getOption("spark.graft.maxLocalEdges")
-      .map(_.toLong).getOrElse(DefaultMaxRows)
-    val byteBound = spark.conf.getOption("spark.graft.maxLocalStateBytes")
-      .map(_.toLong).getOrElse(DefaultMaxBytes)
+  /** The bounded collect for driver-local replays that want the rows
+    * themselves: Some(rows) when the frame fits both bounds, None when
+    * the caller must stay distributed. */
+  def collectBounded(df: DataFrame): Option[Array[Row]] =
+    collectRows(df).map { rows =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      rows.map(r => toRow(r).asInstanceOf[Row])
+    }
+
+  /** [[collectBounded]] for a frame whose row count the caller already
+    * observed (on its scratch write): a frame over the row bound is
+    * never collected. */
+  def collectObserved(df: DataFrame, observedRows: Long): Option[Array[Row]] =
+    if (observedRows <= bounds(df.sparkSession)._1) collectBounded(df) else None
+
+  private def bounds(spark: SparkSession): (Long, Long) = (
+    spark.conf.getOption("spark.graft.maxLocalEdges")
+      .map(_.toLong).getOrElse(DefaultMaxRows),
+    spark.conf.getOption("spark.graft.maxLocalStateBytes")
+      .map(_.toLong).getOrElse(DefaultMaxBytes))
+
+  /** The frame's UnsafeRows when their count and exact byte sum fit
+    * both bounds, else None. A local relation's rows are already on the
+    * driver and need no job. */
+  private def collectRows(df: DataFrame): Option[Array[InternalRow]] = {
+    val (rowBound, byteBound) = bounds(df.sparkSession)
     if (rowBound <= 0L || byteBound <= 0L) return None
-    val width = rowWidth(df)
-    // fetch cap: the row bound, shrunk so (cap × estimated width) stays
-    // inside the byte bound — the collect itself is what must be bounded
-    val cap = math.min(rowBound, math.max(1L, byteBound / math.max(1L, width)))
-    val fetch = (cap + 1L).min(Int.MaxValue.toLong).toInt
-    // limit+collect plans as CollectLimitExec.executeTake, which by
-    // default probes partitions in growing waves (1, 4, 16, …) — up to
-    // 4 scheduling rounds per pin on a 32-partition aggregate, which is
-    // pure overhead when the state is known-small and every partition
-    // must be visited anyway. Pin the take to one wave for this collect.
-    val prevWave = spark.conf.getOption("spark.sql.limit.initialNumPartitions")
-    spark.conf.set("spark.sql.limit.initialNumPartitions", Int.MaxValue.toString)
-    val rows =
-      try df.limit(fetch).collect()
-      finally prevWave match {
-        case Some(v) => spark.conf.set("spark.sql.limit.initialNumPartitions", v)
-        case None => spark.conf.unset("spark.sql.limit.initialNumPartitions")
-      }
-    if (rows.length <= cap && bytesOf(rows) <= byteBound) Some(rows) else None
-  }
-
-  /** Estimated bytes per external row: exact for fixed-width schemas;
-    * probed from one collected row otherwise (cached per schema). */
-  private def rowWidth(df: DataFrame): Long =
-    fixedWidth(df.schema).getOrElse {
-      val cached = widthCache.get(df.schema)
-      if (cached > 0L) cached
-      else {
-        val probe = df.limit(1).collect()
-        val w = if (probe.isEmpty) 64L else math.max(64L, bytesOf(probe))
-        widthCache.put(df.schema, w)
-        w
-      }
+    val schema = df.schema
+    val qe = df.queryExecution
+    val parts = qe.executedPlan match {
+      case local: LocalTableScanExec =>
+        Array(encode(local.executeCollect().iterator, schema, rowBound, byteBound))
+      case _ =>
+        SQLExecution.withNewExecutionId(qe, Some("pin")) {
+          val rdd = qe.toRdd
+          if (rdd.partitions.isEmpty) Array.empty[(Long, Long, Array[Byte])]
+          else rdd.sparkContext.runJob(rdd,
+            (it: Iterator[InternalRow]) => encode(it, schema, rowBound, byteBound))
+        }
     }
+    if (parts.map(_._1).sum > rowBound || parts.map(_._2).sum > byteBound) None
+    else Some(parts.flatMap { case (n, _, bytes) => decode(bytes, n, schema.length) })
+  }
 
-  /** Some(width) when every field is fixed-width; None otherwise. */
-  private def fixedWidth(schema: StructType): Option[Long] = {
-    def fieldWidth(dt: DataType): Option[Long] = dt match {
-      case LongType | DoubleType | TimestampType | DateType => Some(8L)
-      case IntegerType | FloatType => Some(4L)
-      case ShortType => Some(2L)
-      case ByteType | BooleanType => Some(1L)
-      case _: DecimalType => Some(32L)
-      case s: StructType => fixedWidth(s)
-      case _ => None // strings, arrays, maps, binary: probe instead
+  /** One partition's rows as (rows, exact bytes, size-prefixed
+    * UnsafeRow payload), stopping as soon as either bound is passed. */
+  private def encode(it: Iterator[InternalRow], schema: StructType,
+      rowBound: Long, byteBound: Long): (Long, Long, Array[Byte]) = {
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    val buf = new ByteArrayOutputStream()
+    val out = new DataOutputStream(buf)
+    val scratch = new Array[Byte](4096)
+    var rows = 0L
+    var bytes = 0L
+    while (rows <= rowBound && bytes <= byteBound && it.hasNext) {
+      val row = it.next() match {
+        case u: UnsafeRow => u
+        case r => toUnsafe(r)
+      }
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, scratch)
+      rows += 1L
+      bytes += row.getSizeInBytes
     }
-    val ws = schema.fields.map(f => fieldWidth(f.dataType))
-    if (ws.forall(_.isDefined)) Some(ws.map(_.get).sum + 16L) else None
+    out.flush()
+    (rows, bytes, buf.toByteArray)
   }
 
-  /** Conservative external-row byte estimate (boxing overhead folded
-    * into per-value constants). */
-  private[ops] def bytesOf(rows: Array[Row]): Long = {
-    var total = 0L
-    var i = 0
-    while (i < rows.length) { total += valueBytes(rows(i)); i += 1 }
-    total
-  }
-
-  private def valueBytes(v: Any): Long = v match {
-    case null => 8L
-    case r: Row =>
-      var s = 16L; var i = 0
-      while (i < r.length) { s += valueBytes(r.get(i)); i += 1 }
-      s
-    case s: String => 40L + 2L * s.length
-    case a: Array[Byte] => 16L + a.length
-    case seq: scala.collection.Seq[_] => 16L + seq.map(valueBytes).sum
-    case m: scala.collection.Map[_, _] =>
-      16L + m.iterator.map { case (k, x) => valueBytes(k) + valueBytes(x) }.sum
-    case _: java.lang.Integer | _: java.lang.Float => 16L
-    case _: java.math.BigDecimal | _: BigDecimal => 48L
-    case _ => 16L // boxed long/double/timestamp/date/short/byte/boolean
+  private def decode(bytes: Array[Byte], rows: Long, fields: Int): Array[InternalRow] = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    Array.fill[InternalRow](rows.toInt) {
+      val size = in.readInt()
+      val b = new Array[Byte](size)
+      in.readFully(b)
+      val row = new UnsafeRow(fields)
+      row.pointTo(b, size)
+      row
+    }
   }
 }

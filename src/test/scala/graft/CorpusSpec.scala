@@ -15,8 +15,8 @@ class CorpusSpec extends SparkTestBase {
   }
 
   test("connected components: distributed loop agrees with union-find") {
-    // a 40-link chain + random extra pairs; threshold 0 forces the
-    // scratch-table loop, default takes the driver fast path
+    // a 40-link chain + random extra pairs; the gate conf at 0 forces
+    // the scratch-table loop, default takes the driver fast path
     val rng = new scala.util.Random(11)
     val chain = (0 until 40).map(i => (100L + i, 101L + i))
     val extra = (0 until 30).map(_ => (rng.nextInt(50).toLong, rng.nextInt(50).toLong))
@@ -24,7 +24,8 @@ class CorpusSpec extends SparkTestBase {
     val pairs = (chain ++ extra).toDF("a", "b")
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLoop = asMap(Corpus.connectedComponents(pairs, smallGraphThreshold = 0))
+    val viaLoop = asMap(
+      withConf("spark.graft.maxLocalEdges" -> "0")(Corpus.connectedComponents(pairs)))
     val viaUf = asMap(Corpus.connectedComponents(pairs))
     assert(viaLoop == viaUf && viaUf.nonEmpty)
   }
@@ -42,7 +43,8 @@ class CorpusSpec extends SparkTestBase {
     val expected = Map("docA" -> "docA", "docB" -> "docA", "docC" -> "docA",
       "zy" -> "zy", "zz" -> "zy")
     assert(asMap(Corpus.connectedComponents(pairs)) == expected)
-    assert(asMap(Corpus.connectedComponents(pairs, smallGraphThreshold = 0)) == expected)
+    assert(asMap(withConf("spark.graft.maxLocalEdges" -> "0")(
+      Corpus.connectedComponents(pairs))) == expected)
   }
 
   test("connected components: superseded scratch tables are retired eagerly") {
@@ -52,7 +54,8 @@ class CorpusSpec extends SparkTestBase {
     val before = scratchDirs()
     // force the distributed loop (several iterations on a chain)
     val pairs = (0 until 25).map(i => (i.toLong, i + 1L)).toDF("a", "b")
-    Corpus.connectedComponents(pairs, smallGraphThreshold = 0).collect()
+    withConf("spark.graft.maxLocalEdges" -> "0")(Corpus.connectedComponents(pairs))
+      .collect()
     // only the FINAL labels table may remain; pairs + per-iteration
     // labels tables must be gone
     assert(scratchDirs() - before <= 1)

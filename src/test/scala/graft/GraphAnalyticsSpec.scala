@@ -9,6 +9,9 @@ import org.apache.spark.sql.functions._
 class GraphAnalyticsSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The Pin gate's row bound at 0: every operator stays distributed. */
+  private val distributed = "spark.graft.maxLocalEdges" -> "0"
+
   // a house graph: square 1-2-3-4 plus roof edge set {1-2 diagonal}:
   //   edges: 1-2, 2-3, 3-4, 4-1, 1-3  → two triangles (1,2,3), (1,3,4)
   private lazy val house = Seq(
@@ -651,7 +654,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
   test("louvain: gated local phase equals the distributed scratch loop") {
     // the same fixture the gated queries run: weighted co-purchase
     // edges, single- and multi-level, local fast path (default gate)
-    // vs the distributed loop (maxLocalEdges = 0 override) — exact
+    // vs the distributed loop (the gate conf at 0) — exact
     // value equality, the union-find-fast-path differential discipline
     val li = spark.read.parquet(s"${sf()}/lineitem.parquet")
       .filter(col("l_partkey") % 4 === 0)
@@ -660,9 +663,9 @@ class GraphAnalyticsSpec extends SparkTestBase {
       val local = Graph.louvain(e, maxRounds = 2,
         weightCol = Some("weight"), levels = lv).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
-      val dist = Graph.louvain(e, maxRounds = 2,
-        weightCol = Some("weight"), levels = lv, maxLocalEdges = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      val dist = withConf(distributed)(Graph.louvain(e, maxRounds = 2,
+        weightCol = Some("weight"), levels = lv)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet)
       assert(local == dist, s"local/distributed divergence at levels=$lv")
     }
     // unweighted hand graph with a self-mass level: bridge triangles
@@ -670,15 +673,15 @@ class GraphAnalyticsSpec extends SparkTestBase {
       (4L, 6L), (3L, 4L)).toDF("src", "dst")
     assert(
       Graph.louvain(hand, maxRounds = 1, levels = 2).collect().toSet ==
-      Graph.louvain(hand, maxRounds = 1, levels = 2, maxLocalEdges = 0L)
-        .collect().toSet)
+      withConf(distributed)(Graph.louvain(hand, maxRounds = 1, levels = 2)
+        .collect().toSet))
   }
 
   test("peel-loop local fast paths equal the distributed loops " +
       "(scc / topo / coloring / matching)") {
     // the gated-query fixtures: co-purchase edges, and the parity-
     // directed rendition for SCC; local (default gate) vs distributed
-    // (maxLocalEdges = 0) — exact set equality, the louvain discipline
+    // (the gate conf at 0) — exact set equality, the louvain discipline
     val li = spark.read.parquet(s"${sf()}/lineitem.parquet")
       .filter(col("l_partkey") % 4 === 0)
     val e = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
@@ -689,36 +692,36 @@ class GraphAnalyticsSpec extends SparkTestBase {
     def sets(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toSeq).toSet
     assert(sets(Graph.stronglyConnectedComponents(directed)) ==
-      sets(Graph.stronglyConnectedComponents(directed, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.stronglyConnectedComponents(directed))),
       "scc local/distributed divergence")
     assert(sets(Graph.topoLayers(e, maxRounds = 8)) ==
-      sets(Graph.topoLayers(e, maxRounds = 8, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.topoLayers(e, maxRounds = 8))),
       "topo local/distributed divergence")
     assert(sets(Graph.greedyColoring(e, maxRounds = 8)) ==
-      sets(Graph.greedyColoring(e, maxRounds = 8, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.greedyColoring(e, maxRounds = 8))),
       "coloring local/distributed divergence")
     assert(sets(Graph.maximalMatching(e, maxRounds = 8)) ==
-      sets(Graph.maximalMatching(e, maxRounds = 8, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.maximalMatching(e, maxRounds = 8))),
       "matching local/distributed divergence")
     assert(sets(Graph.kCore(e, k = 3, maxRounds = 30)) ==
-      sets(Graph.kCore(e, k = 3, maxRounds = 30, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.kCore(e, k = 3, maxRounds = 30))),
       "kcore local/distributed divergence")
     assert(sets(Graph.kTruss(e, k = 3, maxRounds = 30)) ==
-      sets(Graph.kTruss(e, k = 3, maxRounds = 30, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.kTruss(e, k = 3, maxRounds = 30))),
       "ktruss local/distributed divergence")
     // a tight round cap exercises the unconverged residual identically
     assert(sets(Graph.kCore(e, k = 3, maxRounds = 1)) ==
-      sets(Graph.kCore(e, k = 3, maxRounds = 1, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.kCore(e, k = 3, maxRounds = 1))),
       "kcore capped-rounds local/distributed divergence")
     assert(sets(Graph.kTruss(e, k = 4, maxRounds = 1)) ==
-      sets(Graph.kTruss(e, k = 4, maxRounds = 1, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.kTruss(e, k = 4, maxRounds = 1))),
       "ktruss capped-rounds local/distributed divergence")
     // a low maxRounds exercises the unresolved/null-residual contract
     // on both paths identically
     assert(sets(Graph.topoLayers(e, maxRounds = 2)) ==
-      sets(Graph.topoLayers(e, maxRounds = 2, maxLocalEdges = 0L)))
+      withConf(distributed)(sets(Graph.topoLayers(e, maxRounds = 2))))
     assert(sets(Graph.maximalMatching(e, maxRounds = 1)) ==
-      sets(Graph.maximalMatching(e, maxRounds = 1, maxLocalEdges = 0L)))
+      withConf(distributed)(sets(Graph.maximalMatching(e, maxRounds = 1))))
   }
 
   test("landmark-ball local fast paths equal the distributed BFS loops " +
@@ -726,7 +729,7 @@ class GraphAnalyticsSpec extends SparkTestBase {
     // the gated-query fixture: co-purchase edges + the mod-50 landmark
     // sample; local (default gate, accumulate-per-source — never a
     // ball table, the r10 revert's failure mode) vs distributed
-    // (maxLocalEdges = 0) — exact value equality including the 9-dp
+    // (the gate conf at 0) — exact value equality including the 9-dp
     // decimal-sum and 6-dp division replays
     val li = spark.read.parquet(s"${sf()}/lineitem.parquet")
       .filter(col("l_partkey") % 4 === 0)
@@ -737,16 +740,16 @@ class GraphAnalyticsSpec extends SparkTestBase {
     def sets(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toSeq).toSet
     assert(sets(Graph.harmonicCentrality(e, 3, Some(marks))) ==
-      sets(Graph.harmonicCentrality(e, 3, Some(marks), maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.harmonicCentrality(e, 3, Some(marks)))),
       "harmonic local/distributed divergence")
     assert(sets(Graph.closenessCentrality(e, 3, Some(marks))) ==
-      sets(Graph.closenessCentrality(e, 3, Some(marks), maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.closenessCentrality(e, 3, Some(marks)))),
       "closeness local/distributed divergence")
     assert(sets(Graph.distanceDistribution(e, 3, Some(marks))) ==
-      sets(Graph.distanceDistribution(e, 3, Some(marks), maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.distanceDistribution(e, 3, Some(marks)))),
       "distance-distribution local/distributed divergence")
     assert(sets(Graph.betweennessCentrality(e, 3, Some(marks))) ==
-      sets(Graph.betweennessCentrality(e, 3, Some(marks), maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.betweennessCentrality(e, 3, Some(marks)))),
       "betweenness local/distributed divergence")
     // sources = None keeps the distributed loop (the documented
     // all-sources Θ(V·V) regime is an executor problem either way)
@@ -770,24 +773,24 @@ class GraphAnalyticsSpec extends SparkTestBase {
     def sets(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toSeq).toSet
     assert(sets(Graph.eigenvectorCentrality(e, iters = 3)) ==
-      sets(Graph.eigenvectorCentrality(e, iters = 3, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.eigenvectorCentrality(e, iters = 3))),
       "eigenvector local/distributed divergence")
     assert(sets(Graph.hits(directed, iters = 3)) ==
-      sets(Graph.hits(directed, iters = 3, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.hits(directed, iters = 3))),
       "hits local/distributed divergence")
     assert(sets(Graph.katzCentrality(e, iters = 3)) ==
-      sets(Graph.katzCentrality(e, iters = 3, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.katzCentrality(e, iters = 3))),
       "katz local/distributed divergence")
     // LPA: Long-tally replay is gated on integer-valued weights (w≡1
     // here and summed co-occurrence counts both qualify)
     assert(sets(Graph.labelPropagation(e, rounds = 3)) ==
-      sets(Graph.labelPropagation(e, rounds = 3, maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.labelPropagation(e, rounds = 3))),
       "lpa local/distributed divergence")
     val we = Graph.coOccurrenceWeightedEdges(li, "l_orderkey", "l_partkey")
     assert(sets(Graph.labelPropagation(we, rounds = 3,
         weightCol = Some("weight"))) ==
-      sets(Graph.labelPropagation(we, rounds = 3,
-        weightCol = Some("weight"), maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.labelPropagation(we, rounds = 3,
+        weightCol = Some("weight")))),
       "weighted lpa local/distributed divergence")
     // fractional weights must refuse the local path (double vote sums
     // are order-dependent there)
@@ -799,34 +802,33 @@ class GraphAnalyticsSpec extends SparkTestBase {
     // fastRP: md5-coin init + decimal rounds replay bit-exactly
     assert(sets(Graph.fastRP(e, dims = 8, iterations = 2,
         iterationWeights = Seq(1.0, 1.0))) ==
-      sets(Graph.fastRP(e, dims = 8, iterations = 2,
-        iterationWeights = Seq(1.0, 1.0), maxLocalEdges = 0L)),
+      withConf(distributed)(sets(Graph.fastRP(e, dims = 8, iterations = 2,
+        iterationWeights = Seq(1.0, 1.0)))),
       "fastrp local/distributed divergence")
   }
 
   test("spark.graft.maxLocalEdges conf globally disables the local fast paths") {
-    // the ADVICE deployment dial: a small-driver-heap deployment turns
-    // the driver-local fast paths off in ONE place instead of threading
-    // maxLocalEdges = 0 through every call; an explicit argument that
-    // differs from the default still wins over the conf
+    // the deployment dial: a small-driver-heap deployment turns every
+    // driver-local fast path off in ONE place, the Pin gate's conf pair
     val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val docs = Seq((1L, "low lower lowest"), (2L, "new newer")).toDF("doc_id", "text")
     def isDriverLocal(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.collectLeaves().forall(
         _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-    assert(isDriverLocal(Graph.stronglyConnectedComponents(e)),
-      "tiny Long-id graph must take the driver-local path by default")
-    spark.conf.set("spark.graft.maxLocalEdges", "0")
-    try {
+    def cc() = graft.operators.Corpus.connectedComponents(e, aCol = "src", bCol = "dst")
+    def bpe() = graft.operators.TextAnalysis.bpeEncodeCounts(docs, rounds = 2)
+    assert(isDriverLocal(Graph.stronglyConnectedComponents(e)) &&
+      isDriverLocal(cc()) && isDriverLocal(bpe()),
+      "tiny inputs must take the driver-local paths by default")
+    withConf(distributed) {
       assert(!isDriverLocal(Graph.stronglyConnectedComponents(e)),
         "conf = 0 must force the distributed loop")
       assert(!isDriverLocal(Graph.topoLayers(e)) &&
         !isDriverLocal(Graph.greedyColoring(e)) &&
-        !isDriverLocal(Graph.maximalMatching(e)),
+        !isDriverLocal(Graph.maximalMatching(e)) &&
+        !isDriverLocal(cc()) && !isDriverLocal(bpe()),
         "conf = 0 must cover every fast-path operator")
-      assert(isDriverLocal(
-        Graph.stronglyConnectedComponents(e, maxLocalEdges = 10L)),
-        "an explicit non-default argument must win over the conf")
-    } finally spark.conf.unset("spark.graft.maxLocalEdges")
+    }
   }
 
   test("pageRank conserves mass on the fixture co-purchase graph") {

@@ -213,17 +213,17 @@ class GraphLawsSpec extends SparkTestBase {
         def sets(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(_.toSeq).toSet
         sets(Graph.topoLayers(directed, maxRounds = rounds)) ==
-          sets(Graph.topoLayers(directed, maxRounds = rounds,
-            maxLocalEdges = 0L)) &&
+          withConf("spark.graft.maxLocalEdges" -> "0")(
+            sets(Graph.topoLayers(directed, maxRounds = rounds))) &&
         sets(Graph.greedyColoring(e, maxRounds = rounds)) ==
-          sets(Graph.greedyColoring(e, maxRounds = rounds,
-            maxLocalEdges = 0L)) &&
+          withConf("spark.graft.maxLocalEdges" -> "0")(
+            sets(Graph.greedyColoring(e, maxRounds = rounds))) &&
         sets(Graph.maximalMatching(e, maxRounds = rounds)) ==
-          sets(Graph.maximalMatching(e, maxRounds = rounds,
-            maxLocalEdges = 0L)) &&
+          withConf("spark.graft.maxLocalEdges" -> "0")(
+            sets(Graph.maximalMatching(e, maxRounds = rounds))) &&
         sets(Graph.louvain(e, maxRounds = rounds.min(2))) ==
-          sets(Graph.louvain(e, maxRounds = rounds.min(2),
-            maxLocalEdges = 0L))
+          withConf("spark.graft.maxLocalEdges" -> "0")(
+            sets(Graph.louvain(e, maxRounds = rounds.min(2))))
       }
     })
   }

@@ -33,18 +33,77 @@ class PinStateSpec extends SparkTestBase {
     val df = spark.range(200).select(col("id").as("query_id"),
       transform(sequence(lit(1), lit(512)),
         i => i.cast("double") / 7.0d).as("qv"))
-    val prev = spark.conf.getOption("spark.graft.maxLocalStateBytes")
-    spark.conf.set("spark.graft.maxLocalStateBytes", (64L * 1024).toString)
-    try {
+    withConf("spark.graft.maxLocalStateBytes" -> (64L * 1024).toString) {
       val pinned = Pin.state(df, "pin_wide")
       assert(!isLocal(pinned),
         "a frontier past the byte bound must fall back to scratch parquet")
       assert(pinned.count() == 200L)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.maxLocalStateBytes", v)
-        case None => spark.conf.unset("spark.graft.maxLocalStateBytes")
+    }
+  }
+
+  test("a high-dimensional frame after a low-dimensional one of the same " +
+      "schema is bounded in bytes while it is collected") {
+    // both frames share one StructType (long, array<double>); a width
+    // learned from the 4-dim frame must not size the 512-dim collect
+    def vecs(n: Long, dim: Int) = spark.range(0, n, 1, 4).select(
+      col("id").as("query_id"),
+      transform(sequence(lit(1), lit(dim)),
+        i => sin(i.cast("double") + col("id") * 1000.0d)).as("qv"))
+    val low = vecs(100, 4)
+    val high = vecs(2000, 512) // ~4.1 KB per row, ~8 MB in all
+    assert(low.schema == high.schema)
+    val bound = 64L * 1024
+    withConf("spark.graft.maxLocalStateBytes" -> bound.toString) {
+      assert(isLocal(Pin.state(low, "pin_low")), "the 4-dim frame fits")
+      val resultBytes = new java.util.concurrent.atomic.AtomicLong()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) resultBytes.addAndGet(e.taskMetrics.resultSize)
       }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try assert(Pin.collectBounded(high).isEmpty)
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      // each of the 4 partitions stops once past the bound: at most one
+      // bound plus one row each, plus task-result framing
+      assert(resultBytes.get < 4L * (bound + 8L * 1024) + 64L * 1024,
+        s"${resultBytes.get} bytes reached the driver")
+      val pinned = Pin.state(high, "pin_high")
+      assert(!isLocal(pinned) && pinned.count() == 2000L)
+    }
+  }
+
+  test("concurrent pins on one session leave the session conf unchanged") {
+    val key = "spark.sql.limit.initialNumPartitions"
+    withConf(key -> "7") {
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      @volatile var watching = true
+      val watcher = new Thread(() =>
+        while (watching) { seen.add(spark.conf.get(key)); Thread.onSpinWait() })
+      watcher.start()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val runs = (0 until 4).map { t =>
+          pool.submit(new java.util.concurrent.Callable[Long] {
+            def call(): Long = (1 to 3).map { i =>
+              Pin.state(spark.range(10L * t + i).toDF("id"), "pin_conc").count()
+            }.sum
+          })
+        }
+        assert(runs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS)) ==
+          (0 until 4).map(t => (1 to 3).map(i => 10L * t + i).sum))
+      } finally {
+        watching = false
+        watcher.join()
+        pool.shutdown()
+      }
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSet == Set("7"), s"conf values seen: $seen")
+      assert(spark.conf.get(key) == "7")
     }
   }
 
@@ -59,29 +118,21 @@ class PinStateSpec extends SparkTestBase {
       .filter(col("l_partkey") % 4 === 0)
     val e = graft.operators.Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
     def sets(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    def forcedDistributed[A](body: => A): A = {
-      val prev = spark.conf.getOption("spark.graft.maxLocalEdges")
-      spark.conf.set("spark.graft.maxLocalEdges", "0")
-      try body finally prev match {
-        case Some(v) => spark.conf.set("spark.graft.maxLocalEdges", v)
-        case None => spark.conf.unset("spark.graft.maxLocalEdges")
-      }
-    }
     val bpeLocal = sets(graft.operators.TextAnalysis.bpeMerges(docs, rounds = 4))
-    val bpeDist = forcedDistributed(
+    val bpeDist = withConf("spark.graft.maxLocalEdges" -> "0")(
       sets(graft.operators.TextAnalysis.bpeMerges(docs, rounds = 4)))
     assert(bpeLocal == bpeDist, "bpe local/distributed divergence")
     val encLocal = sets(graft.operators.TextAnalysis.bpeEncodeCounts(docs, rounds = 4))
-    val encDist = forcedDistributed(
+    val encDist = withConf("spark.graft.maxLocalEdges" -> "0")(
       sets(graft.operators.TextAnalysis.bpeEncodeCounts(docs, rounds = 4)))
     assert(encLocal == encDist, "bpe-encode local/distributed divergence")
     val rwPinned = sets(graft.operators.Graph.randomWalks(e, steps = 3))
-    val rwDist = forcedDistributed(
+    val rwDist = withConf("spark.graft.maxLocalEdges" -> "0")(
       sets(graft.operators.Graph.randomWalks(e, steps = 3)))
     assert(rwPinned == rwDist, "random-walk pinned/distributed divergence")
     val prPinned = graft.operators.Graph.pageRank(e, iters = 3)
       .select(col("node"), round(col("rank"), 9).as("r"))
-    val prDist = forcedDistributed {
+    val prDist = withConf("spark.graft.maxLocalEdges" -> "0") {
       sets(graft.operators.Graph.pageRank(e, iters = 3)
         .select(col("node"), round(col("rank"), 9).as("r")))
     }
@@ -91,18 +142,11 @@ class PinStateSpec extends SparkTestBase {
   test("state over the row bound takes the distributed path") {
     val df = spark.range(1000).select(col("id").as("walk"),
       lit(0).as("step"), (col("id") * 3L).as("node"))
-    val prev = spark.conf.getOption("spark.graft.maxLocalEdges")
-    spark.conf.set("spark.graft.maxLocalEdges", "100")
-    try {
+    withConf("spark.graft.maxLocalEdges" -> "100") {
       val pinned = Pin.state(df, "pin_rows")
       assert(!isLocal(pinned),
         "state past the row bound must fall back to scratch parquet")
       assert(pinned.count() == 1000L)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.maxLocalEdges", v)
-        case None => spark.conf.unset("spark.graft.maxLocalEdges")
-      }
     }
   }
 }

@@ -53,6 +53,24 @@ class Round11OpsSpec extends SparkTestBase {
     assert(v2.collect().toSet == v.collect().toSet)
   }
 
+  test("unigramLmVocab: superseded scratch tables are retired eagerly") {
+    import graft.operators.TextAnalysis
+    val root = graft.ops.Scratch.localRoot.toFile
+    def scratchDirs() = Option(root.listFiles()).getOrElse(Array.empty)
+      .count(f => f.getName.startsWith("ulm_"))
+    val docs = (0L until 50L).map(i => (i, "abab abc cab")).toDF("doc_id", "text")
+    def vocab() = TextAnalysis.unigramLmVocab(docs, seedMulti = 20,
+      keepMulti = 5, emRounds = 3, maxPieceLen = 3, maxWordLen = 12)
+    val pinned = vocab().collect().toSet
+    val before = scratchDirs()
+    // the gate conf at 0 forces every state to a scratch table
+    val dist = withConf("spark.graft.maxLocalEdges" -> "0")(vocab())
+    // only the returned vocabulary's table may remain: the seed counts,
+    // each round's expectations and every superseded vocabulary are gone
+    assert(scratchDirs() - before <= 1)
+    assert(dist.collect().toSet == pinned)
+  }
+
   test("weightedRandomWalks: heavy edges dominate, walks stay on edges") {
     import graft.operators.Graph
     // node 2's neighbors: 1 (weight 1) vs 3 (weight 2^30) — every

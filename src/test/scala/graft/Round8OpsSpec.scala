@@ -193,6 +193,18 @@ class Round8OpsSpec extends SparkTestBase {
     assert(coords.length == emb.count().toInt && coords.distinct.length > 1)
   }
 
+  test("pcaTopComponent: a zero-length vector adds no cells") {
+    // sequence(0, -1) descends: without a guard, one empty row fails
+    // the whole job instead of emitting no covariance cells
+    val vecs = emb.select(col("vec_id"), col("embedding"))
+    val withEmpty = vecs.unionByName(
+      Seq((-1L, Array.empty[Float])).toDF("vec_id", "embedding"))
+    def component(df: org.apache.spark.sql.DataFrame) =
+      Similarity.pcaTopComponent(df, iters = 2).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1).toSeq
+    assert(component(withEmpty) == component(vecs))
+  }
+
   test("empty inputs: round-8 operators degrade to empty, not throw") {
     val noDocs = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -45,16 +45,6 @@ class GraftArrowColumnarSpec extends SparkTestBase {
     dir
   }
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Every payload a write sends, per partition in send order, plus the
     * (rows, bytes) it reports. */
   private def payloads(df: DataFrame, batchSize: Int): (Map[Int, Seq[Array[Byte]]], (Long, Long)) = {
