@@ -79,13 +79,12 @@ object Corpus {
     // verification), and the union-find replaces O(diameter)
     // distributed rounds — the same switchover production CC
     // implementations use. Past the gate, the scratch-table loop below
-    // is the scale path.
+    // is the scale path, over the pair table the same collect spilled.
     val p0 = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    graft.ops.Pin.collectBounded(p0) match {
-      case Some(rows) => return unionFindLabels(pairs.sparkSession, rows, p0.schema)
-      case None => ()
-    }
-    val (p, pPath) = Scratch.materializeAt(p0, "cc_pairs")
+    val placed = graft.ops.Pin.place(p0, "cc_pairs")
+    placed.rows.foreach(rows =>
+      return unionFindLabels(pairs.sparkSession, rows, p0.schema))
+    val (p, pPath) = (placed.df, placed.path)
     val edges = p.select(col("a").as("s"), col("b").as("d"))
       .union(p.select(col("b").as("s"), col("a").as("d")))
     // Convergence witness, generic over the id type: labels only ever
@@ -1021,19 +1020,9 @@ object Corpus {
       .filter(length(col("g")) > 0)
       .select(col("bench_id"), gramHash(col("g")).as("gram"))
       .distinct()
-    // gram table driver-pinned under the Pin gate (one collect; the
-    // count is the collected length) — the observed scratch write is
-    // the unchanged fallback past it
-    val (bg, nGrams) = graft.ops.Pin.collectBounded(bgPlan) match {
-      case Some(rows) =>
-        import scala.jdk.CollectionConverters._
-        (benchmark.sparkSession.createDataFrame(rows.toSeq.asJava, bgPlan.schema),
-          rows.length.toLong)
-      case None =>
-        val (b, m, _) = graft.ops.Scratch.materializeObservedAt(
-          bgPlan, "decon_bg", count(lit(1)).as("n_grams"))
-        (b, m("n_grams").asInstanceOf[Long])
-    }
+    // gram table placed by the Pin gate: driver-pinned when it fits,
+    // else an observed scratch write of the same collect
+    val graft.ops.Pin.Placed(bg, nGrams, _, _) = graft.ops.Pin.place(bgPlan, "decon_bg")
     val bgSide = if (nGrams <= maxBroadcastGrams) broadcast(bg) else bg
     // fanOut: the per-row token-shingle explode + gram hashing is the
     // corpus-side hot map stage (single-split scans would serialize it)
@@ -1102,19 +1091,9 @@ object Corpus {
       .filter(length(col("g")) > 0)
       .select(col("bench_id"), gramHash(col("g")).as("gram"))
       .distinct()
-    // gram table driver-pinned under the Pin gate (the sketch path is
-    // already driver-bounded by maxSketchGrams); observed scratch write
-    // unchanged past the gate
-    val (bg, nGrams) = graft.ops.Pin.collectBounded(bgPlan) match {
-      case Some(rows) =>
-        import scala.jdk.CollectionConverters._
-        (benchmark.sparkSession.createDataFrame(rows.toSeq.asJava, bgPlan.schema),
-          rows.length.toLong)
-      case None =>
-        val (b, m, _) = graft.ops.Scratch.materializeObservedAt(
-          bgPlan, "deconb_bg", count(lit(1)).as("n_grams"))
-        (b, m("n_grams").asInstanceOf[Long])
-    }
+    // gram table placed by the Pin gate (the sketch path is already
+    // driver-bounded by maxSketchGrams)
+    val graft.ops.Pin.Placed(bg, nGrams, _, _) = graft.ops.Pin.place(bgPlan, "deconb_bg")
     require(nGrams <= maxSketchGrams,
       s"decontaminateBloom: observed $nGrams benchmark grams exceeds " +
         s"maxSketchGrams=$maxSketchGrams — the Bloom sketch would cost " +

@@ -486,22 +486,17 @@ object Graph {
       maxInnerRounds: Int = 40): DataFrame = {
     import graft.ops.Scratch
     val spark = edges.sparkSession
-    var (e, me, ePath) = Scratch.materializeObservedAt(
+    val placed = graft.ops.Pin.place(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct(),
-      "scc_edges", count(lit(1)).as("n"))
-    // observed-gated local fast path (the louvain/union-find
-    // switchover): SCC output is CANONICAL (min member id), so a
-    // driver Tarjan reproduces the FW-BW result exactly — and at
-    // bench scale the FW-BW loop's ~40 write jobs are pure stage
-    // scheduling. Long ids only, under the Pin gate.
-    localEdgePairs(e, me("n").asInstanceOf[Long]) match {
-      case Some(pairs) =>
-        val result = sccLocal(pairs)
-        Scratch.drop(spark, ePath)
-        return longPairFrame(spark, result, "node", "scc_id")
-      case None =>
-    }
+        .filter(col("src") =!= col("dst")).distinct(), "scc_edges")
+    // pinned local fast path (the louvain/union-find switchover): SCC
+    // output is CANONICAL (min member id), so a driver Tarjan
+    // reproduces the FW-BW result exactly — and at bench scale the
+    // FW-BW loop's ~40 write jobs are pure stage scheduling. Long ids
+    // only.
+    localEdgePairs(placed).foreach(pairs =>
+      return longPairFrame(spark, sccLocal(pairs), "node", "scc_id"))
+    var (e, ePath) = (placed.df, placed.path)
     var (nodes, mn, nodesPath) = Scratch.materializeObservedAt(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct(),
@@ -670,10 +665,11 @@ object Graph {
           .agg(sum(col(wc).cast("double")).as("w"))
           .filter(col("w") > 0.0d)
     }
-    val (adj, am, adjPath) = Scratch.materializeObservedAt(
+    val placed = graft.ops.Pin.place(
       e0.select(col("src").as("n"), col("dst").as("x"), col("w"))
         .union(e0.select(col("dst").as("n"), col("src").as("x"), col("w"))),
-      "lpa_adj", count(lit(1)).as("n_rows"), sum(col("w")).as("wsum"))
+      "lpa_adj")
+    val (adj, adjPath) = (placed.df, placed.path)
     // driver-local replay gate (the power-family switchover): vote
     // tallies are DOUBLE sums, which are only order-free when every
     // weight is integer-valued and the total stays under 2^52 — then
@@ -681,26 +677,14 @@ object Graph {
     // order, and a Long-tally replay is bit-identical (unweighted w≡1
     // always qualifies; co-occurrence counts qualify; fractional
     // weights keep the distributed loop).
-    locally {
-      val wsumOk = am("wsum") match {
-        case null => true
-        case d: java.lang.Double =>
-          d.doubleValue <= 4503599627370496.0d // 2^52
-        case _ => false
-      }
-      if (wsumOk &&
-          adj.schema("n").dataType == org.apache.spark.sql.types.LongType) {
-        graft.ops.Pin.collectObserved(adj.select(col("n"), col("x"), col("w")),
-            am("n_rows").asInstanceOf[Long])
-          .map(_.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))) match {
-          case Some(triples) if triples.forall(t => t._3 == math.floor(t._3) &&
+    if (adj.schema("n").dataType == org.apache.spark.sql.types.LongType)
+      placed.rows.map(_.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))) match {
+        case Some(triples) if triples.map(_._3).sum <= 4503599627370496.0d && // 2^52
+            triples.forall(t => t._3 == math.floor(t._3) &&
               math.abs(t._3) < 4503599627370496.0d) =>
-            Scratch.drop(spark, adjPath)
-            return lpaLocal(spark, triples, rounds)
-          case _ =>
-        }
+          return lpaLocal(spark, triples, rounds)
+        case _ =>
       }
-    }
     var labels = adj.select(col("n").as("node")).distinct()
       .withColumn("label", col("node"))
     var labelsPath: String = null // round 0 is a projection of adj
@@ -751,20 +735,14 @@ object Graph {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
-    var (e, nE, ePath) = Scratch.materializeObservedAt(
-      canonicalEdges(edges), "kcore_edges", count(lit(1)).as("n"))
-    var n = nE("n").asInstanceOf[Long]
-    // observed-gated driver-local peel (the topoLocal switchover): the
-    // peel is all-integer — degrees, the <k cut, the same round cap —
-    // so the local replay is value-exact, and each distributed round's
-    // TWO jobs (degree+anti-join write) collapse to array passes
-    localEdgePairs(e, n) match {
-      case Some(pairs) =>
-        val result = kCoreLocal(pairs, k, maxRounds)
-        Scratch.drop(spark, ePath)
-        return longPairFrame(spark, result, "node", "degree")
-      case None =>
-    }
+    val placed = graft.ops.Pin.place(canonicalEdges(edges), "kcore_edges")
+    // pinned driver-local peel (the topoLocal switchover): the peel is
+    // all-integer — degrees, the <k cut, the same round cap — so the
+    // local replay is value-exact, and each distributed round's TWO
+    // jobs (degree+anti-join write) collapse to array passes
+    localEdgePairs(placed).foreach(pairs =>
+      return longPairFrame(spark, kCoreLocal(pairs, k, maxRounds), "node", "degree"))
+    var (e, n, ePath) = (placed.df, placed.count, placed.path)
     var rounds = 0
     var converged = n == 0L
     while (!converged && rounds < maxRounds) {
@@ -813,19 +791,14 @@ object Graph {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
-    var (e, em, ePath) = Scratch.materializeObservedAt(
-      edges.select(col("src"), col("dst")).distinct(), "topo_edges",
-      count(lit(1)).as("n"))
-    // observed-gated local Kahn replay (the louvain switchover): layer
-    // = earliest wave is canonical up to the cap, and the peel loop's
+    val placed = graft.ops.Pin.place(
+      edges.select(col("src"), col("dst")).distinct(), "topo_edges")
+    // pinned local Kahn replay (the louvain switchover): layer =
+    // earliest wave is canonical up to the cap, and the peel loop's
     // per-wave write jobs are pure stage scheduling at bench scale
-    localEdgePairs(e, em("n").asInstanceOf[Long]) match {
-      case Some(pairs) =>
-        val result = topoLocal(pairs, maxRounds)
-        Scratch.drop(spark, ePath)
-        return longNullableFrame(spark, result, "node", "layer")
-      case None =>
-    }
+    localEdgePairs(placed).foreach(pairs =>
+      return longNullableFrame(spark, topoLocal(pairs, maxRounds), "node", "layer"))
+    var (e, ePath) = (placed.df, placed.path)
     val (nodes, nodesPath) = Scratch.materializeAt(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct(), "topo_nodes")
@@ -930,18 +903,13 @@ object Graph {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
-    var (e, em, ePath) = Scratch.materializeObservedAt(
-      canonicalEdges(edges), "color_edges", count(lit(1)).as("n"))
-    // observed-gated local Jones-Plassmann replay (the louvain
-    // switchover): identical waves, identical mex fold, and the
-    // differential spec + sf0.01 oracle pin the equality
-    localEdgePairs(e, em("n").asInstanceOf[Long]) match {
-      case Some(pairs) =>
-        val result = coloringLocal(pairs, maxRounds)
-        Scratch.drop(spark, ePath)
-        return longNullableFrame(spark, result, "node", "color")
-      case None =>
-    }
+    val placed = graft.ops.Pin.place(canonicalEdges(edges), "color_edges")
+    // pinned local Jones-Plassmann replay (the louvain switchover):
+    // identical waves, identical mex fold, and the differential spec +
+    // sf0.01 oracle pin the equality
+    localEdgePairs(placed).foreach(pairs =>
+      return longNullableFrame(spark, coloringLocal(pairs, maxRounds), "node", "color"))
+    var (e, ePath) = (placed.df, placed.path)
     // full symmetric adjacency — the COLOR lookup runs against all
     // edges, not just the shrinking remainder
     val (adj, adjPath) = Scratch.materializeAt(
@@ -1079,15 +1047,14 @@ object Graph {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
-    var (e, em0, ePath) = Scratch.materializeObservedAt(
-      canonicalEdges(edges), "match_edges", count(lit(1)).as("n"))
-    // observed-gated local replay of the synchronous rounds (the
-    // louvain switchover): same both-ends-minimal waves under the
-    // canonical order, same null-round residual contract
-    localEdgePairs(e, em0("n").asInstanceOf[Long]) match {
+    val placed = graft.ops.Pin.place(canonicalEdges(edges), "match_edges")
+    var (e, ePath) = (placed.df, placed.path)
+    // pinned local replay of the synchronous rounds (the louvain
+    // switchover): same both-ends-minimal waves under the canonical
+    // order, same null-round residual contract
+    localEdgePairs(placed) match {
       case Some(pairs) =>
         val result = matchingLocal(pairs, maxRounds)
-        Scratch.drop(spark, ePath)
         val jrows: java.util.List[org.apache.spark.sql.Row] =
           java.util.Arrays.asList(result.map(r =>
             org.apache.spark.sql.Row(r._1, r._2,
@@ -1236,20 +1203,18 @@ object Graph {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
     val minSup = (k - 2).toLong
-    var (e, em, ePath) = Scratch.materializeObservedAt(
-      canonicalEdges(edges), "truss_edges", count(lit(1)).as("n"))
-    var n = em("n").asInstanceOf[Long]
-    // observed-gated driver-local peel (the kCoreLocal switchover):
+    val placed = graft.ops.Pin.place(canonicalEdges(edges), "truss_edges")
+    var (e, n, ePath) = (placed.df, placed.count, placed.path)
+    // pinned driver-local peel (the kCoreLocal switchover):
     // per-edge support is the all-integer triangle count |N(u)∩N(v)|,
     // the peel and round cap replicate exactly, so the local replay is
     // value-exact; each distributed round's wedge-join + two observed
     // writes collapse to in-memory set intersections. Round 13 measured
     // the per-round fanOutByKey variant a net LOSS here (shrinking peel
     // rounds); the local replay removes the rounds altogether.
-    localEdgePairs(e, n) match {
+    localEdgePairs(placed) match {
       case Some(pairs) =>
         val result = kTrussLocal(pairs, minSup, maxRounds)
-        Scratch.drop(spark, ePath)
         val rows: java.util.List[org.apache.spark.sql.Row] =
           java.util.Arrays.asList(result.map { case (s, d, sup) =>
             org.apache.spark.sql.Row(s, d, sup)
@@ -1556,13 +1521,12 @@ object Graph {
       sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
-    val (adj, nAdj, adjPath) = symAdjacency(edges, "harm")
-    tryLocalBalls(adj, nAdj, sources) match {
+    val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "harm")
+    tryLocalBalls(adjP, sources) match {
       case Some(g) =>
         // driver-local replay: Σ over reached t of the SAME 9-dp term
         // under an exact decimal sum, one accumulator per source —
         // never a ball table (see tryLocalBalls)
-        graft.ops.Scratch.drop(spark, adjPath)
         val dist = Array.fill(g.ids.length)(-1)
         val rows: java.util.List[org.apache.spark.sql.Row] =
           java.util.Arrays.asList(g.seeds.map { s =>
@@ -1608,12 +1572,11 @@ object Graph {
       sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
-    val (adj, nAdj, adjPath) = symAdjacency(edges, "close")
-    tryLocalBalls(adj, nAdj, sources) match {
+    val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "close")
+    tryLocalBalls(adjP, sources) match {
       case Some(g) =>
         // driver-local replay: integer reached/dist sums + the same
         // one 6-dp division — bit-exact by construction
-        graft.ops.Scratch.drop(spark, adjPath)
         val dist = Array.fill(g.ids.length)(-1)
         val rows: java.util.List[org.apache.spark.sql.Row] =
           java.util.Arrays.asList(g.seeds.map { s =>
@@ -1688,15 +1651,14 @@ object Graph {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
-    val (adj, nAdj, adjPath) = symAdjacency(edges, "btw")
-    tryLocalBalls(adj, nAdj, sources) match {
+    val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "btw")
+    tryLocalBalls(adjP, sources) match {
       case Some(g) =>
         // driver-local Brandes replay: per source, forward BFS with
         // integer σ then backward δ levels using the SAME IEEE term
         // (1/σw)·(1+δw), the same 9-dp round, and the same order-exact
         // decimal sums as the distributed plan — state is O(V + E) per
         // source, never a ball table
-        Scratch.drop(spark, adjPath)
         return betweennessLocal(spark, g, maxHops)
       case None => ()
     }
@@ -1821,19 +1783,13 @@ object Graph {
           org.apache.spark.sql.types.DoubleType, nullable = true))))
   }
 
-  /** Materialize the symmetrized adjacency of the landmark-BFS family
-    * with its row count OBSERVED on the write — the count gates the
-    * driver-local ball engine ([[tryLocalBalls]]); the caller retires
-    * the path. */
-  private def symAdjacency(
-      edges: DataFrame, prefix: String): (DataFrame, Long, String) = {
-    import graft.ops.Scratch
+  /** Place the symmetrized adjacency of the landmark-BFS family with
+    * [[graft.ops.Pin.place]]: pinned rows feed the driver-local ball
+    * engine ([[tryLocalBalls]]); the caller retires a spilled path. */
+  private def symAdjacency(edges: DataFrame, prefix: String): graft.ops.Pin.Placed = {
     val e0 = canonicalEdges(edges)
-    val (adj, am, path) = Scratch.materializeObservedAt(
-      e0.select(col("src"), col("dst"))
-        .union(e0.select(col("dst").as("src"), col("src").as("dst"))),
-      s"${prefix}_adj", count(lit(1)).as("n"))
-    (adj, am("n").asInstanceOf[Long], path)
+    graft.ops.Pin.place(e0.select(col("src"), col("dst"))
+      .union(e0.select(col("dst").as("src"), col("src").as("dst"))), s"${prefix}_adj")
   }
 
   /** Driver-local rendition of the landmark-ball family's graph:
@@ -1842,7 +1798,7 @@ object Graph {
   private final case class LocalBalls(
       ids: Array[Long], adj: Array[Array[Int]], seeds: Array[Int])
 
-  /** Observed-gated driver-local switchover for the landmark-ball
+  /** Pinned driver-local switchover for the landmark-ball
     * family (harmonic / closeness / distance-distribution /
     * betweenness) — the peel/louvain fast-path discipline applied to
     * the shared BFS engine, with the round-10 negative result designed
@@ -1851,18 +1807,16 @@ object Graph {
     * measured REGRESSION, reverted, STATUS.md). Here NO ball ever
     * materializes: each source's BFS accumulates straight into
     * node-sized sums, so driver state stays O(V + E) — exactly the
-    * peel paths' footprint — and the collect is bounded by the
-    * OBSERVED adjacency row count, never by hope.
+    * peel paths' footprint — and the collect is bounded by the Pin
+    * gate, never by hope.
     *
-    * Gate: the adjacency fits [[graft.ops.Pin]] (its observed row count
-    * and bytes), Long ids, an EXPLICIT landmark frame (`sources` =
+    * Gate: the adjacency was pinned by [[graft.ops.Pin.place]], Long ids, an EXPLICIT landmark frame (`sources` =
     * None keeps the distributed loop — all-sources on a dense graph is
     * the documented Θ(V·V) ball regime either way), ≤ 100k seeds, and
     * a |S|·|adj| work budget so a large landmark set on a near-cap
     * graph cannot pin the driver for minutes single-threaded. */
   private def tryLocalBalls(
-      adjDf: DataFrame,
-      nAdj: Long,
+      adj: graft.ops.Pin.Placed,
       sources: Option[DataFrame]): Option[LocalBalls] = {
     if (sources.isEmpty) return None
     val src = sources.get
@@ -1870,9 +1824,9 @@ object Graph {
     if (seeds0.schema("s").dataType != org.apache.spark.sql.types.LongType)
       return None
     val seedCap = 100000
-    localEdgePairs(adjDf, nAdj).flatMap { pairs =>
+    localEdgePairs(adj).flatMap { pairs =>
       val seedArr = seeds0.limit(seedCap + 1).collect().map(_.getLong(0))
-      if (seedArr.length > seedCap || seedArr.length.toLong * nAdj > 512000000L) None
+      if (seedArr.length > seedCap || seedArr.length.toLong * adj.count > 512000000L) None
       else {
         val (ids, adj, idx) = indexPairs(pairs)
         // landmark ids absent from the graph drop (no edges → no ball),
@@ -1901,15 +1855,14 @@ object Graph {
     (ids, adj, idx)
   }
 
-  /** Observed-gated driver-local collect of a (src, dst) pair scratch
-    * for the power-iteration replays (eigenvector / HITS / Katz): the
+  /** Driver-local index of a pinned (src, dst) pair frame for the
+    * power-iteration replays (eigenvector / HITS / Katz): the
     * [[tryLocalBalls]] gate minus the landmark dial — the iteration
-    * count bounds the work, so only the pair count and Long ids gate.
+    * count bounds the work, so only the Pin gate and Long ids gate.
     * State is O(V + E); nothing O(iterations·E) ever materializes. */
   private def tryLocalPairs(
-      adjDf: DataFrame,
-      nPairs: Long): Option[(Array[Long], Array[Array[Int]])] =
-    localEdgePairs(adjDf, nPairs).map { pairs =>
+      adj: graft.ops.Pin.Placed): Option[(Array[Long], Array[Array[Int]])] =
+    localEdgePairs(adj).map { pairs =>
       val (ids, adj, _) = indexPairs(pairs)
       (ids, adj)
     }
@@ -2306,12 +2259,11 @@ object Graph {
       sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
-    val (adj, nAdj, adjPath) = symAdjacency(edges, "dd")
-    tryLocalBalls(adj, nAdj, sources) match {
+    val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "dd")
+    tryLocalBalls(adjP, sources) match {
       case Some(g) =>
         // driver-local replay: an all-integer hop histogram — only
         // hop values that actually occur emit rows, like the groupBy
-        graft.ops.Scratch.drop(spark, adjPath)
         val dist = Array.fill(g.ids.length)(-1)
         val hist = new Array[Long](maxHops + 1)
         g.seeds.foreach { s =>
@@ -2366,12 +2318,11 @@ object Graph {
     val spark = edges.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val e0 = canonicalEdges(edges)
-    val (adj, nAdj, adjPath) = symAdjacency(edges, "eig")
-    tryLocalPairs(adj, nAdj).foreach { case (ids, ladj) =>
+    val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "eig")
+    tryLocalPairs(adjP).foreach { case (ids, ladj) =>
       // driver-local replay of the L1-normalized rounds: same 9-dp
       // terms under exact decimal sums, same normalizer, same one
       // IEEE division + 9-dp round per node per round
-      Scratch.drop(spark, adjPath)
       val score = Array.fill(ids.length)(1.0d)
       val present = Array.fill(ids.length)(true)
       for (_ <- 1 to iters) {
@@ -2452,11 +2403,10 @@ object Graph {
     require(iters >= 1, "iters must be >= 1")
     val spark = edges.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
-    val (adj, am, adjPath) = Scratch.materializeObservedAt(
+    val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = graft.ops.Pin.place(
       edges.filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).distinct(),
-      "hits_adj", count(lit(1)).as("n"))
-    tryLocalPairs(adj, am("n").asInstanceOf[Long])
+        .select(col("src"), col("dst")).distinct(), "hits_adj")
+    tryLocalPairs(adjP)
       .foreach { case (ids, fwd) =>
         // driver-local replay of the mutual half-rounds: auth pulls
         // through forward edges from hub, hub pulls through REVERSED
@@ -2464,7 +2414,6 @@ object Graph {
         // Presence tracks the half-round output tables (a node absent
         // from auth/hub contributes nothing next half and reads 0.0
         // in the final coalesce).
-        Scratch.drop(spark, adjPath)
         val rev = reverse(fwd, ids.length)
         var authS = Array.fill(ids.length)(1.0d)
         var authP = Array.fill(ids.length)(true)
@@ -2860,25 +2809,17 @@ object Graph {
     // degree of the AVERAGING node rides the adjacency rows (groupBy +
     // equi-join, AQE-skew-splittable — see pageRank)
     val deg = sym.groupBy(col("n")).agg(count(lit(1)).as("degree"))
-    val (adj, am, adjPath) = Scratch.materializeObservedAt(
-      sym.join(deg, Seq("n")), "frp_adj", count(lit(1)).as("n_rows"))
+    val placed @ graft.ops.Pin.Placed(adj, _, adjPath, _) =
+      graft.ops.Pin.place(sym.join(deg, Seq("n")), "frp_adj")
     // driver-local replay gate (the power-family switchover): every
     // stage is 9/12-dp terms under order-exact DECIMAL sums plus fixed
     // IEEE ops (one division by the integer degree, one sqrt, the
     // md5-coin init) — all bit-replayable; budget counts edge·dim work
-    locally {
-      val nRows = am("n_rows").asInstanceOf[Long]
-      if (nRows * dims * iterations <= 512000000L &&
-          adj.schema("n").dataType == org.apache.spark.sql.types.LongType) {
-        graft.ops.Pin.collectObserved(adj.select(col("n"), col("x")), nRows) match {
-          case Some(rows) =>
-            Scratch.drop(spark, adjPath)
-            return fastRpLocal(spark, rows.map(r => (r.getLong(0), r.getLong(1))),
-              dims, iterations, iterationWeights, salt)
-          case None =>
-        }
-      }
-    }
+    if (placed.count * dims * iterations <= 512000000L &&
+        adj.schema("n").dataType == org.apache.spark.sql.types.LongType)
+      placed.rows.foreach(rows =>
+        return fastRpLocal(spark, rows.map(r => (r.getLong(0), r.getLong(1))),
+          dims, iterations, iterationWeights, salt))
     val coin = conv(substring(md5(concat_ws(":", lit(salt),
       col("node").cast("string"), col("dim").cast("string"))), 1, 8), 16, 10)
       .cast("long")
@@ -3212,7 +3153,12 @@ object Graph {
 
   /** Driver-local rendition of one [[louvain]] phase when both inputs
     * fit the Pin gate under their observed row counts (None otherwise,
-    * or for non-Long ids). Replays the distributed
+    * or for non-Long ids). This is the one site that collects with
+    * [[graft.ops.Pin.collectObserved]] instead of placing with
+    * [[graft.ops.Pin.place]]: the phase's edge and self-mass tables
+    * are scratch tables written before it runs, because the next
+    * level's contraction reads those same tables whether or not the
+    * phase runs on the driver. Replays the distributed
     * phase exactly: identity start, rounds of two snapshot half-sweeps
     * (odd ids then even ids, moves computed against the half-sweep's
     * INPUT labels), gain = m2·k_{i,C} − k_i·(Σtot(C) − [C=C₀]·k_i) as
@@ -3307,14 +3253,15 @@ object Graph {
       "node", "label"))
   }
 
-  /** The (src, dst) pairs of a Long-id scratch edge table when
-    * [[graft.ops.Pin]] admits it under its observed row count, else
-    * None (other id types keep the distributed loop). */
-  private def localEdgePairs(e: DataFrame, observedRows: Long)
-      : Option[Array[(Long, Long)]] =
-    if (e.schema("src").dataType != org.apache.spark.sql.types.LongType) None
-    else graft.ops.Pin.collectObserved(e.select(col("src"), col("dst")), observedRows)
-      .map(_.map(r => (r.getLong(0), r.getLong(1))))
+  /** The (src, dst) pairs of a Long-id edge frame that
+    * [[graft.ops.Pin.place]] pinned, else None (a spilled frame or
+    * other id types keep the distributed loop). */
+  private def localEdgePairs(e: graft.ops.Pin.Placed): Option[Array[(Long, Long)]] = {
+    val schema = e.df.schema
+    if (schema("src").dataType != org.apache.spark.sql.types.LongType) None
+    else e.rows.map(_.map(r =>
+      (r.getLong(schema.fieldIndex("src")), r.getLong(schema.fieldIndex("dst")))))
+  }
 
   private def longPairFrame(
       spark: org.apache.spark.sql.SparkSession,
@@ -3903,16 +3850,8 @@ object Graph {
           col("m.dst").as("dst"), col("m.ca").as("ca"), col("m.cb").as("cb"))
         .groupBy(col("src"), col("dst"), col("w"))
         .agg(min(col("ca")).as("ca"), max(col("cb")).as("cb"))
-      val (sel, nSel) = graft.ops.Pin.collectBounded(selPlan) match {
-        case Some(rows) =>
-          import scala.jdk.CollectionConverters._
-          (spark.createDataFrame(rows.toSeq.asJava, selPlan.schema),
-            rows.length.toLong)
-        case None =>
-          val (s2, m, _) = Scratch.materializeObservedAt(
-            selPlan, s"mst_sel_$r", count(lit(1)).as("n"))
-          (s2, m("n").asInstanceOf[Long])
-      }
+      val graft.ops.Pin.Placed(sel, nSel, _, _) =
+        graft.ops.Pin.place(selPlan, s"mst_sel_$r")
       if (nSel == 0L) done = true
       else {
         out = out.unionByName(
@@ -4162,12 +4101,11 @@ object Graph {
     val spark = edges.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val e0 = canonicalEdges(edges)
-    val (adj, nAdj, adjPath) = symAdjacency(edges, "katz")
-    tryLocalPairs(adj, nAdj).foreach { case (ids, ladj) =>
+    val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "katz")
+    tryLocalPairs(adjP).foreach { case (ids, ladj) =>
       // driver-local replay: same decimal contribution rounds; every
       // node keeps a score each round (the left-join semantics —
       // no-contribution nodes take coalesce(·, 0.0))
-      Scratch.drop(spark, adjPath)
       val score = Array.fill(ids.length)(1.0d)
       val all = Array.fill(ids.length)(true)
       for (_ <- 1 to iters) {

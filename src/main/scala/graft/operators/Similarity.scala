@@ -751,47 +751,39 @@ object Similarity {
     // local relation — a plan-side union of two local scans costs a
     // doubled-partition shuffle every power round); past the gate the
     // mirror is the plan-side union over the scratch table
-    val (cov, covPath) = graft.ops.Pin.collectBounded(upperAgg) match {
+    val upper = graft.ops.Pin.place(upperAgg, "pca_cov")
+    val covPath = upper.path
+    val cov = upper.rows match {
       case Some(rows) =>
         import scala.jdk.CollectionConverters._
         val full = rows ++ rows.iterator.filter(r => r.getInt(0) != r.getInt(1))
           .map(r => org.apache.spark.sql.Row(r.getInt(1), r.getInt(0), r.get(2)))
-        (spark.createDataFrame(full.toSeq.asJava, upperAgg.schema),
-          null: String)
+        spark.createDataFrame(full.toSeq.asJava, upperAgg.schema)
       case None =>
-        val (cu, p) = Scratch.materializeAt(upperAgg, "pca_cov")
-        (cu.unionByName(cu.filter(col("i") =!= col("j"))
-          .select(col("j").as("i"), col("i").as("j"), col("c"))), p)
+        upper.df.unionByName(upper.df.filter(col("i") =!= col("j"))
+          .select(col("j").as("i"), col("i").as("j"), col("c")))
     }
     // power rounds over the tiny covariance table: the per-round
-    // contribution state is ≤ d rows — driver-pinned under the Pin gate
-    // with the L1 normalizer summed from the collected exact decimals
-    // (identical to the observed write-job sum); past the gate the
-    // round falls back to the observed scratch write, unchanged
+    // contribution state is ≤ d rows — placed by the Pin gate, with the
+    // L1 normalizer summed from the pinned exact decimals (identical to
+    // the sum observed on a spill write)
     var v = cov.select(col("j").as("vj")).distinct().withColumn("vv", lit(1.0d))
     var vPath: String = null
     for (_ <- 1 to iters) {
       val contribPlan = cov.join(v, cov("j") === v("vj"))
         .groupBy(cov("i"))
         .agg(sum(round(col("c") * col("vv"), 9).cast(dec)).as("u"))
-      val (contrib, l1, cPath) = graft.ops.Pin.collectBounded(contribPlan) match {
-        case Some(rows) =>
-          import scala.jdk.CollectionConverters._
-          val l1b = rows.foldLeft(java.math.BigDecimal.ZERO) { (acc, r) =>
-            val u = r.getDecimal(1)
-            if (u == null) acc else acc.add(u.abs)
-          }
-          (spark.createDataFrame(rows.toSeq.asJava, contribPlan.schema),
-            l1b.doubleValue, null: String)
-        case None =>
-          val (c, cm, p) = Scratch.materializeObservedAt(contribPlan, "pca_v",
-            sum(abs(col("u"))).as("l1"))
-          val l1v = cm("l1") match {
-            case null => 0.0d
-            case bd: java.math.BigDecimal => bd.doubleValue
-            case d: java.lang.Number => d.doubleValue
-          }
-          (c, l1v, p)
+      val placed @ graft.ops.Pin.Placed(contrib, _, cPath, cm) = graft.ops.Pin.place(
+        contribPlan, "pca_v", sum(abs(col("u"))).as("l1"))
+      val l1 = placed.rows.fold(cm("l1")) { rows =>
+        rows.foldLeft(java.math.BigDecimal.ZERO) { (acc, r) =>
+          val u = r.getDecimal(1)
+          if (u == null) acc else acc.add(u.abs)
+        }
+      } match {
+        case null => 0.0d
+        case bd: java.math.BigDecimal => bd.doubleValue
+        case d: java.lang.Number => d.doubleValue
       }
       if (vPath != null) Scratch.drop(spark, vPath)
       if (l1 == 0.0d) {

@@ -360,17 +360,16 @@ object TextAnalysis {
     // the merge sequence and final state are value-identical to the
     // scratch-table loop below; rounds cost zero jobs instead of two
     // (pair argmax + state write) each. Past the gate — the 100 TB
-    // vocabulary — the distributed loop is unchanged.
-    graft.ops.Pin.collectBounded(words) match {
-      case Some(rows) =>
-        return bpeLearnLocal(spark,
-          rows.map(r => (r.getString(0), r.getLong(1))), rounds)
-      case None => ()
-    }
-    val sym0 = words.select(col("word"), col("cnt"),
+    // vocabulary — the distributed loop starts from the word table the
+    // same collect spilled.
+    val placed = graft.ops.Pin.place(words, "bpe_words")
+    placed.rows.foreach(rows =>
+      return bpeLearnLocal(spark, rows.map(r => (r.getString(0), r.getLong(1))), rounds))
+    val sym0 = placed.df.select(col("word"), col("cnt"),
       transform(sequence(lit(1), length(col("word"))),
         i => col("word").substr(i, lit(1))).as("sym"))
     var (state, statePath) = graft.ops.Scratch.materializeAt(sym0, "bpe_sym")
+    graft.ops.Scratch.drop(spark, placed.path)
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     for (round <- 1 to rounds) {
       val pairs = state

@@ -49,11 +49,6 @@ object Scratch {
     (scan, m)
   }
 
-  /** `materializeObserved` that also hands back the written path, for
-    * iterative callers that retire superseded scratch tables themselves
-    * (see `drop`) instead of leaving them to the JVM shutdown hook — a
-    * long-lived session running many iterative jobs would otherwise
-    * accumulate O(iterations) dead parquet directories. */
   /** Marker file dropped into every observed-write scratch directory —
     * the machine-readable record that this table's row count was
     * MEASURED on the write (the decontaminate / quantileNormalize gate
@@ -94,6 +89,11 @@ object Scratch {
     ()
   }
 
+  /** `materializeObserved` that also hands back the written path, for
+    * iterative callers that retire superseded scratch tables themselves
+    * (see `drop`) instead of leaving them to the JVM shutdown hook — a
+    * long-lived session running many iterative jobs would otherwise
+    * accumulate O(iterations) dead parquet directories. */
   def materializeObservedAt(
       df: DataFrame,
       prefix: String,

@@ -15,6 +15,33 @@ class PinStateSpec extends SparkTestBase {
       case _ => false
     }
 
+  /** Run `body` with `listener` on the bus, every event drained. */
+  private def listening[A](listener: org.apache.spark.scheduler.SparkListener)(
+      body: => A): A = {
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Task-result bytes the driver received from the first job `body`
+    * ran (the collect, not the spill write that may follow it). */
+  private def collectResultBytes(body: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val stages = new java.util.concurrent.atomic.AtomicReference[Set[Int]]()
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        stages.compareAndSet(null, e.stageIds.toSet)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && stages.get.contains(e.stageId))
+          bytes.addAndGet(e.taskMetrics.resultSize)
+    })(body)
+    bytes.get
+  }
+
   test("small fixed-width state pins to a local relation, values exact") {
     import spark.implicits._
     val df = Seq((1L, 0, 7L), (2L, 0, 9L)).toDF("walk", "step", "node")
@@ -55,23 +82,12 @@ class PinStateSpec extends SparkTestBase {
     val bound = 64L * 1024
     withConf("spark.graft.maxLocalStateBytes" -> bound.toString) {
       assert(isLocal(Pin.state(low, "pin_low")), "the 4-dim frame fits")
-      val resultBytes = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) resultBytes.addAndGet(e.taskMetrics.resultSize)
-      }
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try assert(Pin.collectBounded(high).isEmpty)
-      finally {
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      val resultBytes = collectResultBytes(
+        assert(Pin.place(high, "pin_high_place").rows.isEmpty))
       // each of the 4 partitions stops once past the bound: at most one
       // bound plus one row each, plus task-result framing
-      assert(resultBytes.get < 4L * (bound + 8L * 1024) + 64L * 1024,
-        s"${resultBytes.get} bytes reached the driver")
+      assert(resultBytes < 4L * (bound + 8L * 1024) + 64L * 1024,
+        s"$resultBytes bytes reached the driver")
       val pinned = Pin.state(high, "pin_high")
       assert(!isLocal(pinned) && pinned.count() == 2000L)
     }
@@ -148,5 +164,85 @@ class PinStateSpec extends SparkTestBase {
         "state past the row bound must fall back to scratch parquet")
       assert(pinned.count() == 1000L)
     }
+  }
+
+  test("a compressible frame pins and ships fewer task-result bytes than " +
+      "its exact row bytes") {
+    // 50 k rows of two longs: 24 exact UnsafeRow bytes each, one
+    // repeating value pattern that the io codec squeezes
+    val df = spark.range(0, 50000, 1, 4)
+      .select((col("id") % 10).as("a"), lit(7L).as("b"))
+    val exact = 50000L * 24
+    val shipped = collectResultBytes {
+      val pinned = Pin.state(df, "pin_codec")
+      assert(isLocal(pinned))
+      assert(pinned.agg(sum(col("a"))).head().getLong(0) == 5000L * 45)
+    }
+    assert(shipped < exact, s"$shipped task-result bytes for $exact row bytes")
+  }
+
+  test("a frame over the byte bound in many small partitions ships about " +
+      "one bound to the driver") {
+    // 64 partitions of 1000 (long, hash) rows: 24 KB exact each, far
+    // under the 128 KB bound, 1.5 MB in all
+    val df = spark.range(0, 64000, 1, 64)
+      .select(col("id"), xxhash64(col("id")).as("h"))
+    val bound = 128L * 1024
+    val part = 1000L * (24 + 4)
+    withConf("spark.graft.maxLocalStateBytes" -> bound.toString) {
+      val shipped = collectResultBytes {
+        val pinned = Pin.state(df, "pin_many")
+        assert(!isLocal(pinned) && pinned.count() == 64000L)
+      }
+      assert(shipped < bound + 4L * part + 64L * 1024,
+        s"$shipped task-result bytes for a $bound-byte bound")
+    }
+  }
+
+  test("an over-bound producer runs its shuffle map stage once across " +
+      "collect and spill") {
+    val df = spark.range(0, 20000, 1, 4)
+      .groupBy((col("id") % 5000).as("k")).agg(count(lit(1)).as("n"))
+    withConf("spark.graft.maxLocalEdges" -> "100") {
+      // a skipped stage never completes, so only map stages that ran count
+      val mapStages = new java.util.concurrent.atomic.AtomicInteger()
+      val pinned = listening(new org.apache.spark.scheduler.SparkListener {
+        override def onStageCompleted(
+            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+          if (org.apache.spark.StageShuffle.depId(e.stageInfo).isDefined)
+            mapStages.incrementAndGet()
+      })(Pin.state(df, "pin_once"))
+      assert(!isLocal(pinned) && pinned.count() == 5000L)
+      assert(mapStages.get == 1, s"${mapStages.get} shuffle map stages ran")
+    }
+  }
+
+  test("a pinned kCore and a pinned decontaminate write no parquet") {
+    import spark.implicits._
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists(_.isInstanceOf[org.apache.spark.sql.execution
+            .datasources.InsertIntoHadoopFsRelationCommand])) writes.incrementAndGet()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val edges = spark.range(0, 300).select(col("id").as("src"),
+      ((col("id") * 7 + 3) % 300).as("dst"))
+    val docs = Seq((1L, "a b c d e f g h i j"), (2L, "k l m n o p q r s t"))
+      .toDF("doc_id", "text")
+    val bench = Seq((9L, "a b c d e f g h i")).toDF("bench_id", "text")
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      assert(graft.operators.Graph.kCore(edges, 2).count() > 0L)
+      assert(graft.operators.Corpus.decontaminate(docs, bench, nTokens = 4)
+        .filter(col("contaminated")).count() == 1L)
+    } finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(writes.get == 0, s"${writes.get} parquet writes")
   }
 }
