@@ -38,11 +38,11 @@ import org.apache.spark.sql.types.StructType
  * entry point: it runs the frame's executed plan once, as one collect
  * job, and either pins the rows or writes that same RDD to scratch.
  * Each partition copies its UnsafeRows into a payload compressed with
- * the session's io codec and stops as soon as it passes either bound;
- * the driver admits partition results as they arrive and cancels the
- * job once the running totals pass either bound, so a frame spread
- * over many small partitions ships about one bound to the driver, not
- * all of its rows. On a miss the producer's shuffle map stages are
+ * the session's io codec and stops as soon as it passes either bound
+ * (shipping its counts only, then); the driver admits partition
+ * results as they arrive and cancels the job once the running totals
+ * pass either bound, so a frame spread over many small partitions
+ * ships about one bound to the driver, not all of its rows. On a miss the producer's shuffle map stages are
  * already materialized, so the scratch write skips them and runs only
  * the final stage again. Pin writes no session conf.
  */
@@ -159,7 +159,8 @@ object Pin {
 
   /** One partition's rows as (rows, exact bytes, compressed
     * size-prefixed UnsafeRow payload), stopping as soon as either bound
-    * is passed. */
+    * is passed. A partition over a bound on its own ships its counts
+    * only: the driver cannot admit its rows. */
   private def encode(it: Iterator[InternalRow], schema: StructType,
       rowBound: Long, byteBound: Long): (Long, Long, Array[Byte]) = {
     lazy val toUnsafe = UnsafeProjection.create(schema)
@@ -180,7 +181,8 @@ object Pin {
       bytes += row.getSizeInBytes
     }
     out.close()
-    (rows, bytes, buf.toByteArray)
+    (rows, bytes, if (rows > rowBound || bytes > byteBound) Array.emptyByteArray
+      else buf.toByteArray)
   }
 
   private def decode(bytes: Array[Byte], rows: Long, fields: Int): Array[InternalRow] = {
