@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -469,7 +469,7 @@ object Graph {
    * bounded by the peeling depth (2-3 on real graphs), enforced by
    * `maxOuterRounds` with a fail-fast naming the escape.
    *
-   * Scale shape: the [[kCore]]/[[connectedComponents]] scratch-loop
+   * Scale shape: the [[kTruss]]/[[connectedComponents]] scratch-loop
    * discipline throughout — each inner round is one equi-join + min
    * groupBy plus a pointer-jump composition (labels are node ids whose
    * reachability composes, so label² is a valid O(log diameter)
@@ -477,7 +477,11 @@ object Graph {
    * decrease; an unchanged DECIMAL(38,0) label sum proves fixpoint).
    * Nothing driver-side beyond the observed-count loop gates; nothing
    * broadcast that is O(graph). Self-loops drop (v is trivially in its
-   * own SCC); every node appears exactly once in the output. */
+   * own SCC); every node appears exactly once in the output.
+   *
+   * Not a [[graft.ops.Superstep]] program: pinned edges run Tarjan, one
+   * linear pass, where FW-BW as supersteps nests two propagations to
+   * fixpoint inside each peel round, so SCC keeps its driver replay. */
   def stronglyConnectedComponents(
       edges: DataFrame,
       srcCol: String = "src",
@@ -719,52 +723,31 @@ object Graph {
    * the standard cohesive-subgraph filter (Seidman 1983). Returns the
    * surviving nodes with their within-core degree (all >= k).
    *
-   * Loop discipline: each peel round materializes the surviving edge
-   * set as a scratch table whose write job carries the OBSERVED edge
-   * count; the loop stops when the count stops shrinking (peeling is
-   * monotone — a round that removes no node removes no edge), bounded
-   * by `maxRounds` as the runaway backstop. Plans stay constant-size
-   * in the round count ([[pageRank]] discipline); superseded tables
-   * retire eagerly. Each round is two keyed aggs + two anti-joins —
-   * no windows, no driver-side row iteration. Peeling is idempotent
-   * past the fixpoint, which is what makes the unrolled-round oracle
-   * exact regardless of when each side stops.
+   * One [[graft.ops.Superstep]] program ([[kCoreProgram]]) over the
+   * canonical edges: round r's state is each node's degree among the
+   * nodes still alive after round r − 1, so round `maxRounds + 1`
+   * reads the degrees of what `maxRounds` peel rounds leave. Peeling
+   * is idempotent past the fixpoint, which is what makes the
+   * unrolled-round oracle exact regardless of when each side stops.
    */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
-    import graft.ops.Scratch
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val spark = edges.sparkSession
-    val placed = graft.ops.Pin.place(canonicalEdges(edges), "kcore_edges")
-    // pinned driver-local peel (the topoLocal switchover): the peel is
-    // all-integer — degrees, the <k cut, the same round cap — so the
-    // local replay is value-exact, and each distributed round's TWO
-    // jobs (degree+anti-join write) collapse to array passes
-    localEdgePairs(placed).foreach(pairs =>
-      return longPairFrame(spark, kCoreLocal(pairs, k, maxRounds), "node", "degree"))
-    var (e, n, ePath) = (placed.df, placed.count, placed.path)
-    var rounds = 0
-    var converged = n == 0L
-    while (!converged && rounds < maxRounds) {
-      val deg = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      val bad = deg.filter(col("degree") < k).select(col("node"))
-      val (e2, m2, p2) = Scratch.materializeObservedAt(
-        e.join(bad.select(col("node").as("src")), Seq("src"), "left_anti")
-          .join(bad.select(col("node").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")),
-        "kcore_edges", count(lit(1)).as("n"))
-      val n2 = m2("n").asInstanceOf[Long]
-      Scratch.drop(spark, ePath)
-      e = e2; ePath = p2
-      converged = n2 == n || n2 == 0L
-      n = n2
-      rounds += 1
-    }
-    e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
+    kCoreProgram(k).run(canonicalEdges(edges), maxRounds + 1, "kcore")
+      .filter(col("state") > 0L)
+      .select(col("id").as("node"), col("state").as("degree"))
+  }
+
+  /** [[kCore]]'s program: a live node (state >= k, initially
+    * Long.MaxValue) sends 1 to each neighbour and takes the count it
+    * hears as its state; a node under k is dead, and one round later
+    * its state is -1, so a state >= 0 marks a node alive a round ago. */
+  private[graft] def kCoreProgram(k: Int): graft.ops.Superstep[Long] = {
+    import graft.ops.Superstep
+    val kk = k.toLong
+    Superstep[Long](Superstep.Both, Long.MaxValue,
+      (s, _) => if (s >= kk) 1L else Superstep.Silent, Superstep.Sum,
+      (s, heard, _) => if (s >= kk) heard else -1L)
   }
 
   /** Hop-bounded topological layering of a DIRECTED edge frame (Kahn's
@@ -779,106 +762,22 @@ object Graph {
     * ⇒ cyclic dependencies) — surface with a null layer instead of
     * looping forever, the same hop-bound contract as [[shortestPaths]].
     *
-    * Scale shape = the [[kCore]] peel discipline: per round, one
-    * distinct-dst anti-join finds sources (never a global sort or a
-    * driver-side Kahn queue) and one src anti-join shrinks the edge
-    * table; each round's survivors and assignments are scratch tables
-    * with the assignment count OBSERVED on the write, so convergence
-    * (no new sources) stops the loop without a second scan. Rounds cost
-    * O(remaining edges) each; total work is O(maxRounds · |E|) worst
-    * case, O(|E| · avg-depth) typically. */
+    * One [[graft.ops.Superstep]] program ([[topoProgram]]) along the
+    * distinct out edges: per round, each unresolved node sends 1 along
+    * its out edges, and a node that hears none takes the round's layer.
+    * Self-loops keep their node unresolved. */
   def topoLayers(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
-    import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val spark = edges.sparkSession
-    val placed = graft.ops.Pin.place(
-      edges.select(col("src"), col("dst")).distinct(), "topo_edges")
-    // pinned local Kahn replay (the louvain switchover): layer =
-    // earliest wave is canonical up to the cap, and the peel loop's
-    // per-wave write jobs are pure stage scheduling at bench scale
-    localEdgePairs(placed).foreach(pairs =>
-      return longNullableFrame(spark, topoLocal(pairs, maxRounds), "node", "layer"))
-    var (e, ePath) = (placed.df, placed.path)
-    val (nodes, nodesPath) = Scratch.materializeAt(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(), "topo_nodes")
-    var remaining = nodes
-    var remainingPath = nodesPath
-    val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 0
-    var done = false
-    // zero-in-degree among the remaining graph: no surviving edge
-    // points AT the node (distinct dst anti-join — no degree count
-    // needed, presence is enough; the anti join needs no distinct
-    // right side — one shuffle saved)
-    def wave(rem: DataFrame, edg: DataFrame, r: Int): DataFrame =
-      rem.join(edg.select(col("dst").as("node")), Seq("node"), "left_anti")
-        .select(col("node"), lit(r.toLong).as("layer"))
-    while (!done && round < maxRounds) {
-      // TWO peel waves composed lazily per materialization set: wave 2
-      // runs on wave 1's lazy residue, so each loop iteration costs 3
-      // write jobs for 2 rounds instead of 6 (the stage-scheduling
-      // constant is what dominates these node-sized frames; identical
-      // layer assignment — batching is physical only). The convergence
-      // witness observes BOTH waves' counts on the one layer write.
-      val batched = round + 1 < maxRounds
-      if (batched) {
-        val src1 = wave(remaining, e, round)
-        val e1 = e.join(src1.select(col("node").as("src")),
-          Seq("src"), "left_anti")
-        val r1 = remaining.join(src1.select(col("node")),
-          Seq("node"), "left_anti")
-        val src2 = wave(r1, e1, round + 1)
-        val (src, sm, srcPath) = Scratch.materializeObservedAt(
-          src1.unionByName(src2), "topo_layer",
-          count(when(col("layer") === round.toLong, 1)).as("n1"),
-          count(when(col("layer") === (round + 1).toLong, 1)).as("n2"))
-        val n1 = sm("n1").asInstanceOf[Long]
-        val n2 = sm("n2").asInstanceOf[Long]
-        if (n1 == 0L) {
-          Scratch.drop(spark, srcPath)
-          done = true // only cycles (or nothing) left
-        } else {
-          layers += src
-          val (e2, e2Path) = Scratch.materializeAt(
-            e.join(src.select(col("node").as("src")), Seq("src"), "left_anti"),
-            "topo_edges")
-          Scratch.drop(spark, ePath)
-          e = e2; ePath = e2Path
-          val (r2, r2Path) = Scratch.materializeAt(
-            remaining.join(src.select(col("node")), Seq("node"), "left_anti"),
-            "topo_nodes")
-          if (remainingPath != nodesPath) Scratch.drop(spark, remainingPath)
-          remaining = r2; remainingPath = r2Path
-          done = n2 == 0L // wave 2 empty ⇒ fixpoint (cycles only left)
-          round += 2
-        }
-      } else {
-        val (src, sm, srcPath) = Scratch.materializeObservedAt(
-          wave(remaining, e, round), "topo_layer", count(lit(1)).as("n"))
-        val nNew = sm("n").asInstanceOf[Long]
-        if (nNew == 0L) {
-          Scratch.drop(spark, srcPath)
-          done = true
-        } else {
-          layers += src
-          val (e2, e2Path) = Scratch.materializeAt(
-            e.join(src.select(col("node").as("src")), Seq("src"), "left_anti"),
-            "topo_edges")
-          Scratch.drop(spark, ePath)
-          e = e2; ePath = e2Path
-          val (r2, r2Path) = Scratch.materializeAt(
-            remaining.join(src.select(col("node")), Seq("node"), "left_anti"),
-            "topo_nodes")
-          if (remainingPath != nodesPath) Scratch.drop(spark, remainingPath)
-          remaining = r2; remainingPath = r2Path
-          round += 1
-        }
-      }
-    }
-    val unresolved = remaining.select(col("node"),
-      lit(null).cast("long").as("layer"))
-    (layers.toSeq :+ unresolved).reduce(_.unionByName(_))
+    topoProgram.run(edges.select(col("src"), col("dst")).distinct(), maxRounds, "topo")
+      .select(col("id").as("node"), when(col("state") >= 0L, col("state")).as("layer"))
+  }
+
+  /** [[topoLayers]]'s program: state = the layer, -1 while unresolved. */
+  private[graft] val topoProgram: graft.ops.Superstep[Long] = {
+    import graft.ops.Superstep
+    Superstep[Long](Superstep.Out, -1L,
+      (s, _) => if (s < 0L) 1L else Superstep.Silent, Superstep.Sum,
+      (s, heard, r) => if (s < 0L && heard == 0L) r - 1L else s)
   }
 
   /** Hop-bounded greedy graph coloring (the GDS K1-Coloring surface,
@@ -894,123 +793,26 @@ object Graph {
     * for id priority) surface with a null color, the [[topoLayers]]
     * hop-bound contract.
     *
-    * Scale shape = the [[kCore]] peel discipline: per round one
-    * symmetric-adjacency semi-join finds nodes with a smaller-id
-    * uncolored neighbor (everyone else colors), one anti-join each
-    * shrinks the edge and node tables; all scratch-backed, the colored
-    * count OBSERVED on each round's write. */
+    * One [[graft.ops.Superstep]] program ([[coloringProgram]]) over
+    * the canonical (src < dst) edges: per round, each node sends its
+    * color both ways and an uncolored one sends a block (-1) to its
+    * larger neighbours; an uncolored node whose sorted distinct set
+    * holds no block takes the mex of the colors in it. */
   def greedyColoring(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
-    import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val spark = edges.sparkSession
-    val placed = graft.ops.Pin.place(canonicalEdges(edges), "color_edges")
-    // pinned local Jones-Plassmann replay (the louvain switchover):
-    // identical waves, identical mex fold, and the differential spec +
-    // sf0.01 oracle pin the equality
-    localEdgePairs(placed).foreach(pairs =>
-      return longNullableFrame(spark, coloringLocal(pairs, maxRounds), "node", "color"))
-    var (e, ePath) = (placed.df, placed.path)
-    // full symmetric adjacency — the COLOR lookup runs against all
-    // edges, not just the shrinking remainder
-    val (adj, adjPath) = Scratch.materializeAt(
-      e.select(col("src").as("node"), col("dst").as("nbr"))
-        .union(e.select(col("dst").as("node"), col("src").as("nbr"))),
-      "color_adj")
-    val (nodes, nodesPath) = Scratch.materializeAt(
-      adj.select(col("node")).distinct(), "color_nodes")
-    var remaining = nodes
-    var remainingPath = nodesPath
-    // accumulated (node, color); starts empty with the right shape
-    var colored = nodes.filter(lit(false))
-      .select(col("node"), lit(0L).as("color"))
-    var coloredPath: String = null
-    // mex over the SORTED distinct neighbor colors: fold acc+1 on every
-    // exact hit — the minimum excluded non-negative integer
-    def mex(colors: Column): Column =
-      aggregate(array_sort(colors), lit(0L),
-        (acc, x) => when(x === acc, acc + 1L).otherwise(acc))
-    var round = 0
-    var done = false
-    // one coloring wave: local minima of the remaining graph take the
-    // mex of their already-colored neighborhoods. Canonical src<dst
-    // orientation means the smaller endpoint is always src, so exactly
-    // the dst side must wait; the anti join needs no distinct on its
-    // right side — skipping it saves a shuffle per wave.
-    def waveC(rem: DataFrame, edg: DataFrame, cold: DataFrame): DataFrame = {
-      val win = rem.join(
-        edg.select(col("dst").as("node")), Seq("node"), "left_anti")
-      win.join(
-        adj.join(win, Seq("node"), "left_semi")
-          .join(cold.withColumnRenamed("node", "nbr"), Seq("nbr"))
-          .groupBy(col("node"))
-          .agg(mex(collect_set(col("color"))).as("c")),
-        Seq("node"), "left")
-        .select(col("node"), coalesce(col("c"), lit(0L)).as("color"))
-    }
-    while (!done && round < maxRounds) {
-      // TWO waves composed lazily per materialization set (the
-      // topoLayers batching: wave 2 colors against wave 1's lazy
-      // residue and assignments — identical colors, half the write
-      // jobs; wave 1's subplan re-evaluates inside wave 2, the
-      // documented compute-for-scheduling trade). A `wv` marker column
-      // carries the per-wave convergence counts through the one write.
-      val batched = round + 1 < maxRounds
-      val (winC, n1, n2, winPath) = if (batched) {
-        val w1 = waveC(remaining, e, colored)
-        val e1 = e
-          .join(w1.select(col("node").as("src")), Seq("src"), "left_anti")
-          .join(w1.select(col("node").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"))
-        val r1 = remaining.join(w1.select(col("node")), Seq("node"), "left_anti")
-        val w2 = waveC(r1, e1, colored.unionByName(w1))
-        val (both, wm, p) = Scratch.materializeObservedAt(
-          w1.withColumn("wv", lit(0)).unionByName(w2.withColumn("wv", lit(1))),
-          "color_round",
-          count(when(col("wv") === 0, 1)).as("n1"),
-          count(when(col("wv") === 1, 1)).as("n2"))
-        (both.select(col("node"), col("color")),
-          wm("n1").asInstanceOf[Long], wm("n2").asInstanceOf[Long], p)
-      } else {
-        val (w, wm, p) = Scratch.materializeObservedAt(
-          waveC(remaining, e, colored), "color_round",
-          count(lit(1)).as("n"))
-        (w, wm("n").asInstanceOf[Long], -1L, p)
-      }
-      if (n1 == 0L) {
-        Scratch.drop(spark, winPath)
-        done = true
-      } else {
-        val (c2, c2Path) = Scratch.materializeAt(
-          colored.unionByName(winC), "color_assigned")
-        if (coloredPath != null) Scratch.drop(spark, coloredPath)
-        colored = c2; coloredPath = c2Path
-        val (e2, e2Path) = Scratch.materializeAt(
-          e.join(winC.select(col("node").as("src")), Seq("src"), "left_anti")
-            .join(winC.select(col("node").as("dst")), Seq("dst"), "left_anti")
-            .select(col("src"), col("dst")),
-          "color_edges")
-        Scratch.drop(spark, ePath)
-        e = e2; ePath = e2Path
-        val (r2, r2Path) = Scratch.materializeAt(
-          remaining.join(winC.select(col("node")), Seq("node"), "left_anti"),
-          "color_nodes")
-        if (remainingPath != nodesPath) Scratch.drop(spark, remainingPath)
-        remaining = r2; remainingPath = r2Path
-        // winC fully consumed by the three writes above — retire now
-        Scratch.drop(spark, winPath)
-        if (batched) {
-          done = n2 == 0L // wave 2 idle ⇒ fixpoint
-          round += 2
-        } else round += 1
-      }
-    }
-    // adjacency and the residual edge table fed their last round's
-    // writes; only the colored + remaining tables outlive the call
-    Scratch.drop(spark, adjPath)
-    Scratch.drop(spark, ePath)
-    val unresolved = remaining.select(col("node"),
-      lit(null).cast("long").as("color"))
-    colored.unionByName(unresolved)
+    coloringProgram.run(canonicalEdges(edges), maxRounds, "color")
+      .select(col("id").as("node"), when(col("state") >= 0L, col("state")).as("color"))
+  }
+
+  /** [[greedyColoring]]'s program: state = the color, -1 while
+    * uncolored. The mex folds over the sorted distinct colors heard. */
+  private[graft] val coloringProgram: graft.ops.Superstep[Array[Long]] = {
+    import graft.ops.Superstep
+    Superstep[Array[Long]](Superstep.Both, -1L,
+      (s, out) => if (out || s >= 0L) s else Superstep.Silent, Superstep.Distinct,
+      (s, heard, _) =>
+        if (s >= 0L || heard.headOption.exists(_ < 0L)) s
+        else heard.foldLeft(0L)((mex, c) => if (c == mex) mex + 1L else mex))
   }
 
   /** Deterministic greedy MAXIMAL matching (the distributed rendition
@@ -1030,7 +832,7 @@ object Graph {
     * (never a per-node window) + two semi-joins to test "minimum at
     * both ends" + two anti-joins to peel matched nodes — all scratch-
     * backed with the matched count OBSERVED on the write, the
-    * [[kCore]] loop discipline.
+    * [[kTruss]] loop discipline.
     *
     * CONTRACT on the round bound: maximality is only guaranteed when
     * the loop CONVERGES (no edges remain). An adversarial id ordering
@@ -1042,7 +844,11 @@ object Graph {
     * [[topoLayers]]/[[greedyColoring]] unresolved-surface discipline:
     * non-maximality is visible in-band, matched rows filter
     * `round IS NOT NULL`). Escape route: raise `maxRounds` (rounds
-    * are O(log n) expected on non-adversarial orderings). */
+    * are O(log n) expected on non-adversarial orderings).
+    *
+    * Not a [[graft.ops.Superstep]] program: a round needs two message
+    * exchanges (each node's minimum edge, then both ends agreeing on
+    * it), so matching keeps its driver replay. */
   def maximalMatching(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
     import graft.ops.Scratch
     require(maxRounds >= 1, "maxRounds must be >= 1")
@@ -1188,7 +994,7 @@ object Graph {
    * demands the triangles actually close). Returns the surviving edges
    * with their within-truss support (all ≥ k−2).
    *
-   * Loop discipline matches [[kCore]]: each round materializes the
+   * Loop discipline: each round materializes the
    * surviving edge set with the OBSERVED edge count riding the write;
    * stops when the count stops shrinking (peeling is monotone),
    * `maxRounds` as the runaway backstop. Per round: the degree-oriented
@@ -1196,6 +1002,10 @@ object Graph {
    * node), one explode (3 rows per triangle), two keyed aggregates —
    * no windows, no driver iteration, constant-size plans. Peeling is
    * idempotent past the fixpoint (the unrolled-round oracle contract).
+   *
+   * Not a [[graft.ops.Superstep]] program: support is per edge and
+   * counts triangles, which a vertex program over Long states cannot
+   * carry, so kTruss keeps its driver replay.
    */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     import graft.ops.Scratch
@@ -1205,7 +1015,7 @@ object Graph {
     val minSup = (k - 2).toLong
     val placed = graft.ops.Pin.place(canonicalEdges(edges), "truss_edges")
     var (e, n, ePath) = (placed.df, placed.count, placed.path)
-    // pinned driver-local peel (the kCoreLocal switchover):
+    // pinned driver-local peel:
     // per-edge support is the all-integer triangle count |N(u)∩N(v)|,
     // the peel and round cap replicate exactly, so the local replay is
     // value-exact; each distributed round's wedge-join + two observed
@@ -2942,12 +2752,12 @@ object Graph {
           .filter(col("w") > 0L)
     }
     val dec = "decimal(38,0)"
-    // 2m and the edge count ride the edge-table write as Observations
-    // (no separate driver aggregate): m2 is invariant across
-    // contractions; the count gates the local phase fast path below
-    var (e, eMeta, ePath) = Scratch.materializeObservedAt(
-      e0raw.select(col("src"), col("dst"), col("w")), "louvain_edges",
-      (sum(col("w")) * 2L).as("m2"), count(lit(1)).as("n_edges"))
+    // 2m rides the edge table's spill as an Observation, or sums over
+    // its pinned rows (no separate driver aggregate): m2 is invariant
+    // across contractions
+    val e0 = graft.ops.Pin.place(e0raw.select(col("src"), col("dst"), col("w")),
+      "louvain_edges", (sum(col("w")) * 2L).as("m2"))
+    var (e, ePath) = (e0.df, e0.path)
     // self-loop mass per node: zero at level 1, the contracted
     // intra-community weight at deeper levels. A self-loop never
     // changes a MOVE decision (it travels with its node) but it does
@@ -2955,13 +2765,14 @@ object Graph {
     var sw = e.select(col("src").as("node"), lit(0L).as("selfw"))
       .filter(lit(false))
     var swPath: String = null
-    if (eMeta("m2") == null) // empty graph; its (empty) scratch backs the plan
+    if (e0.count == 0L) // empty graph; its (empty) table backs the plan
       return e.select(col("src").as("node"), col("src").as("community"))
-    val m2 = eMeta("m2").asInstanceOf[Long] // 2m
+    val m2 = e0.rows.map(_.map(_.getLong(2)).sum * 2L)
+      .getOrElse(e0.metrics("m2").asInstanceOf[Long]) // 2m
     // one phase of half-sweep local moves over (cross-edges e, self
     // mass sw); returns the phase's label table (node → community).
-    // `nEdges`/`nSelf` are the OBSERVED row counts of the two inputs
-    // (riding their write jobs): under the Pin gate the phase runs
+    // `eRows`/`swRows` are the two inputs' pinned rows (None when
+    // Pin spilled them): when both are pinned the phase runs
     // as a driver-local sweep loop — the [[Corpus.connectedComponents]]
     // union-find switchover, and exactly what production Louvain does
     // once contraction shrinks the graph (level 2+ graphs are
@@ -2970,12 +2781,12 @@ object Graph {
     // local sweep replays the SAME integer arithmetic (BigInt ⊇
     // DECIMAL(38,0)), same snapshot semantics, same (gain, -c)
     // tie-break — value-identical by construction, differential-spec
-    // enforced, and the collect is bounded by the observed counts,
-    // never by hope. Long-typed node ids only; anything else (or a
-    // frame past the Pin gate) takes the distributed scratch-table loop.
-    def phase(e: DataFrame, sw: DataFrame,
-        nEdges: Long, nSelf: Long): (DataFrame, String) = {
-      louvainLocalPhase(e, sw, nEdges, nSelf, m2, maxRounds) match {
+    // enforced. Long-typed node ids only; anything else (or a frame
+    // past the Pin gate) takes the distributed scratch-table loop,
+    // which reads a pinned table as a local relation.
+    def phase(e: DataFrame, sw: DataFrame, eRows: Option[Array[Row]],
+        swRows: Option[Array[Row]]): (DataFrame, String) = {
+      louvainLocalPhase(e, eRows, swRows, m2, maxRounds) match {
         case Some(labels) => return (labels, null)
         case None =>
       }
@@ -3099,8 +2910,7 @@ object Graph {
       (labels, labelsPath)
     }
     // level 1
-    var (labels, labelsPath) = phase(e, sw,
-      eMeta("n_edges").asInstanceOf[Long], 0L)
+    var (labels, labelsPath) = phase(e, sw, e0.rows, Some(Array.empty[Row]))
     var (map, mapPath) = Scratch.materializeAt(
       labels.select(col("node"), col("label").as("community")), "louvain_map")
     Scratch.drop(spark, labelsPath)
@@ -3111,13 +2921,13 @@ object Graph {
       val ls = map.select(col("node").as("src"), col("community").as("ls"))
       val ld = map.select(col("node").as("dst"), col("community").as("ld"))
       val tagged = e.join(ls, Seq("src")).join(ld, Seq("dst"))
-      val (e2, e2Meta, e2Path) = Scratch.materializeObservedAt(
+      val e2 = graft.ops.Pin.place(
         tagged.filter(col("ls") =!= col("ld"))
           .groupBy(least(col("ls"), col("ld")).as("src"),
             greatest(col("ls"), col("ld")).as("dst"))
           .agg(sum(col("w")).as("w")),
-        "louvain_edges", count(lit(1)).as("n_edges"))
-      val (sw2, sw2Meta, sw2Path) = Scratch.materializeObservedAt(
+        "louvain_edges")
+      val sw2 = graft.ops.Pin.place(
         map.select(col("community").as("node")).distinct()
           .join(tagged.filter(col("ls") === col("ld"))
               .groupBy(col("ls").as("node")).agg(sum(col("w")).as("intra"))
@@ -3127,14 +2937,12 @@ object Graph {
               .groupBy(col("node")).agg(sum(col("intra")).as("selfw")),
             Seq("node"), "left")
           .select(col("node"), coalesce(col("selfw"), lit(0L)).as("selfw")),
-        "louvain_selfw", count(lit(1)).as("n_selfw"))
+        "louvain_selfw")
       Scratch.drop(spark, ePath)
-      if (swPath != null) Scratch.drop(spark, swPath)
-      e = e2; ePath = e2Path
-      sw = sw2; swPath = sw2Path
-      val (l2, l2Path) = phase(e, sw,
-        e2Meta("n_edges").asInstanceOf[Long],
-        sw2Meta("n_selfw").asInstanceOf[Long])
+      Scratch.drop(spark, swPath)
+      e = e2.df; ePath = e2.path
+      sw = sw2.df; swPath = sw2.path
+      val (l2, l2Path) = phase(e, sw, e2.rows, sw2.rows)
       val (map2, map2Path) = Scratch.materializeAt(
         map.join(
           l2.select(col("node").as("community_prev"),
@@ -3147,19 +2955,15 @@ object Graph {
       map = map2; mapPath = map2Path
     }
     Scratch.drop(spark, ePath)
-    if (swPath != null) Scratch.drop(spark, swPath)
+    Scratch.drop(spark, swPath)
     map
   }
 
-  /** Driver-local rendition of one [[louvain]] phase when both inputs
-    * fit the Pin gate under their observed row counts (None otherwise,
-    * or for non-Long ids). This is the one site that collects with
-    * [[graft.ops.Pin.collectObserved]] instead of placing with
-    * [[graft.ops.Pin.place]]: the phase's edge and self-mass tables
-    * are scratch tables written before it runs, because the next
-    * level's contraction reads those same tables whether or not the
-    * phase runs on the driver. Replays the distributed
-    * phase exactly: identity start, rounds of two snapshot half-sweeps
+  /** Driver-local rendition of one [[louvain]] phase over the pinned
+    * rows of its edge (src, dst, w) and self-mass (node, selfw) tables,
+    * as [[graft.ops.Pin.place]] placed them (None when either spilled,
+    * or for non-Long ids). Replays the distributed phase exactly:
+    * identity start, rounds of two snapshot half-sweeps
     * (odd ids then even ids, moves computed against the half-sweep's
     * INPUT labels), gain = m2·k_{i,C} − k_i·(Σtot(C) − [C=C₀]·k_i) as
     * exact BigInt (⊇ the distributed DECIMAL(38,0)), ties to the
@@ -3167,16 +2971,14 @@ object Graph {
     * integer modularity strictly increases. All fold orders are
     * commutative integer sums, so map iteration order cannot leak into
     * the result — value-identical to the scratch-table loop by
-    * construction (LouvainLocalSpec runs both paths differentially). */
-  private def louvainLocalPhase(e: DataFrame, sw: DataFrame,
-      nEdges: Long, nSelf: Long, m2: Long, maxRounds: Int): Option[DataFrame] = {
+    * construction (GraphAnalyticsSpec and GraphLawsSpec run both paths
+    * differentially). */
+  private def louvainLocalPhase(e: DataFrame, eRows: Option[Array[Row]],
+      swRows: Option[Array[Row]], m2: Long, maxRounds: Int): Option[DataFrame] = {
     import scala.collection.mutable
     if (e.schema("src").dataType != org.apache.spark.sql.types.LongType)
       return None
-    val collected = for {
-      es <- graft.ops.Pin.collectObserved(e.select(col("src"), col("dst"), col("w")), nEdges)
-      ss <- graft.ops.Pin.collectObserved(sw.select(col("node"), col("selfw")), nSelf)
-    } yield (es, ss)
+    val collected = for (es <- eRows; ss <- swRows) yield (es, ss)
     if (collected.isEmpty) return None
     val spark = e.sparkSession
     val edgeRows = collected.get._1
@@ -3277,20 +3079,6 @@ object Graph {
         org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
-  private def longNullableFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[(Long, Option[Long])],
-      c1: String, c2: String): DataFrame = {
-    val jrows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(rows.map(r =>
-        org.apache.spark.sql.Row(r._1, r._2.map(Long.box).orNull)): _*)
-    spark.createDataFrame(jrows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(c1,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(c2,
-        org.apache.spark.sql.types.LongType, nullable = true))))
-  }
-
   /** Driver-local SCC (iterative Tarjan) — reachable only under the
     * observed edge gate. The OUTPUT is canonical (every node labeled
     * with its strongly connected component's minimum member id), so any
@@ -3350,39 +3138,6 @@ object Graph {
     out.toSeq
   }
 
-  /** Driver-local Kahn-wave replay of [[topoLayers]] — identical
-    * semantics: wave r assigns layer r to the zero-in-degree remainder,
-    * capped at maxRounds; unresolved (deeper or cyclic) stay null. */
-  private def topoLocal(
-      edgeRows: Array[(Long, Long)], maxRounds: Int)
-      : Seq[(Long, Option[Long])] = {
-    import scala.collection.mutable
-    val outAdj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-    val indeg = mutable.LongMap.empty[Long]
-    val nodesSet = mutable.LongMap.empty[Unit]
-    for ((s, d) <- edgeRows.distinct) {
-      outAdj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-      indeg(d) = indeg.getOrElse(d, 0L) + 1L
-      nodesSet(s) = (); nodesSet(d) = ()
-    }
-    val layer = mutable.LongMap.empty[Long]
-    var remaining = nodesSet.keys.toSet
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      val srcs = remaining.filter(n => indeg.getOrElse(n, 0L) == 0L)
-      if (srcs.isEmpty) done = true
-      else {
-        srcs.foreach { n => layer(n) = round.toLong }
-        remaining --= srcs
-        for (s <- srcs; d <- outAdj.getOrElse(s, mutable.ArrayBuffer.empty))
-          indeg(d) = indeg(d) - 1L
-        round += 1
-      }
-    }
-    nodesSet.keys.toSeq.map(n => n -> layer.get(n))
-  }
-
   /** Driver-local replay of the [[kTruss]] peel — identical rounds:
     * per-edge support = the triangle count |N(u)∩N(v)| over the
     * surviving canonical edges, edges under `minSup` peel, same
@@ -3424,90 +3179,6 @@ object Graph {
     }
     val sup = supportOf(edges)
     edges.toSeq.map { case (s, d) => (s, d, sup((s, d))) }
-  }
-
-  /** Driver-local replay of the [[kCore]] peel — identical rounds:
-    * degrees over the surviving canonical edges, the <k node cut, the
-    * same maxRounds/convergence contract (n unchanged or zero), and
-    * the final (node, degree) readout over what survives. All-integer,
-    * so value-exact against the distributed loop. */
-  private def kCoreLocal(
-      canonical: Array[(Long, Long)], k: Int, maxRounds: Int)
-      : Seq[(Long, Long)] = {
-    import scala.collection.mutable
-    var edges = canonical
-    var n = edges.length.toLong
-    var rounds = 0
-    var converged = n == 0L
-    while (!converged && rounds < maxRounds) {
-      val deg = mutable.LongMap.empty[Long]
-      edges.foreach { case (s, d) =>
-        deg(s) = deg.getOrElse(s, 0L) + 1L
-        deg(d) = deg.getOrElse(d, 0L) + 1L
-      }
-      val e2 = edges.filter { case (s, d) => deg(s) >= k && deg(d) >= k }
-      val n2 = e2.length.toLong
-      edges = e2
-      converged = n2 == n || n2 == 0L
-      n = n2
-      rounds += 1
-    }
-    val deg = mutable.LongMap.empty[Long]
-    edges.foreach { case (s, d) =>
-      deg(s) = deg.getOrElse(s, 0L) + 1L
-      deg(d) = deg.getOrElse(d, 0L) + 1L
-    }
-    deg.toSeq
-  }
-
-  /** Driver-local Jones–Plassmann replay of [[greedyColoring]] —
-    * identical waves: round r colors every remaining node with no
-    * remaining smaller-id neighbor, color = the same sorted-distinct
-    * mex fold over the PRE-WAVE colored full neighborhood. */
-  private def coloringLocal(
-      canonical: Array[(Long, Long)], maxRounds: Int)
-      : Seq[(Long, Option[Long])] = {
-    import scala.collection.mutable
-    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-    // remaining smaller-neighbor count per node (canonical src < dst:
-    // exactly the dst side waits)
-    val waitCnt = mutable.LongMap.empty[Long]
-    val smallerOf = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-    val nodesSet = mutable.LongMap.empty[Unit]
-    for ((s, d) <- canonical) {
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-      adj.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += s
-      waitCnt(d) = waitCnt.getOrElse(d, 0L) + 1L
-      smallerOf.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-      nodesSet(s) = (); nodesSet(d) = ()
-    }
-    def mexOf(cs: Seq[Long]): Long = {
-      var acc = 0L
-      cs.distinct.sorted.foreach(x => if (x == acc) acc += 1)
-      acc
-    }
-    val color = mutable.LongMap.empty[Long]
-    var remaining = nodesSet.keys.toSet
-    var round = 0
-    var done = false
-    val empty = mutable.ArrayBuffer.empty[Long]
-    while (!done && round < maxRounds) {
-      val winners = remaining.filter(n => waitCnt.getOrElse(n, 0L) == 0L)
-      if (winners.isEmpty) done = true
-      else {
-        // colors from BEFORE this wave only (the waveC snapshot)
-        val newColors = winners.toSeq.map { n =>
-          n -> mexOf(adj.getOrElse(n, empty).toSeq
-            .filter(color.contains).map(color(_)))
-        }
-        newColors.foreach { case (n, c) => color(n) = c }
-        remaining --= winners
-        for (w <- winners; d <- smallerOf.getOrElse(w, empty)
-             if remaining(d)) waitCnt(d) = waitCnt(d) - 1L
-        round += 1
-      }
-    }
-    nodesSet.keys.toSeq.map(n => n -> color.get(n))
   }
 
   /** Driver-local replay of [[maximalMatching]]'s synchronous rounds:

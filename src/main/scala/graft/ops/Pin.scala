@@ -55,9 +55,11 @@ object Pin {
     * a scan of the scratch table at `path` when spilled; null path
     * when pinned — [[Scratch.drop]] treats null as a no-op), its exact
     * row `count`, and the caller's `metrics` observed on the spill
-    * write (empty when pinned: read them off [[rows]] instead). */
+    * write (empty when pinned: read them off [[rows]] instead).
+    * `pinned` holds the collected UnsafeRows (null when spilled), which
+    * [[Superstep]]'s driver executor reads as primitive longs. */
   final case class Placed(df: DataFrame, count: Long, path: String,
-      metrics: Map[String, Any])(pinned: Array[InternalRow]) {
+      metrics: Map[String, Any])(private[ops] val pinned: Array[InternalRow]) {
     /** The pinned rows, or None when the frame spilled. */
     lazy val rows: Option[Array[Row]] = Option(pinned).map(external(_, df.schema))
   }
@@ -94,19 +96,6 @@ object Pin {
     val (scan, m, path) = Scratch.materializeObservedAt(
       spill, tag, count(lit(1)).as("pin_rows"), metrics: _*)
     Placed(scan, m("pin_rows").asInstanceOf[Long], path, m)(null)
-  }
-
-  /** The bounded collect for the Louvain phase, whose edge and
-    * self-mass tables are written (with their row counts observed)
-    * before the phase decides where to run, because the next level's
-    * contraction reads those same tables: Some(rows) when the frame
-    * fits both bounds, None when the phase stays distributed. A frame
-    * over the row bound is never collected. Every other site calls
-    * [[place]]. */
-  def collectObserved(df: DataFrame, observedRows: Long): Option[Array[Row]] = {
-    val (rowBound, byteBound) = bounds(df.sparkSession)
-    if (rowBound <= 0L || byteBound <= 0L || observedRows > rowBound) None
-    else collect(df.queryExecution, df.schema, rowBound, byteBound).map(external(_, df.schema))
   }
 
   private def external(rows: Array[InternalRow], schema: StructType): Array[Row] = {

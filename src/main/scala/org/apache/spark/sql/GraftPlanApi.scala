@@ -13,13 +13,14 @@ import org.apache.spark.sql.execution.LogicalRDD
  * (`SparkSessionExtensions`, `spark.experimental.extraStrategies`) but
  * no public constructor from `LogicalPlan`, so every extension that
  * ships its own plan node keeps a shim like this in the
- * `org.apache.spark.sql` package. It has three users: the custom plan
+ * `org.apache.spark.sql` package. It has four users: the custom plan
  * nodes (`AsOfJoinPlan`); `graft.ops.Pin`, which wraps the UnsafeRows
  * it collected in a `LocalRelation` without converting them to
- * external rows and back; and Pin's spill, which writes the RDD its
- * collect job already ran ([[ofRdd]], the `Dataset.checkpoint`
- * pattern) so that the producer's shuffle map stages are not run
- * again. Pin also compresses its collect payload with the session's io
+ * external rows and back; `graft.ops.Superstep`'s driver executor,
+ * which returns its vertex states the same way; and Pin's spill, which
+ * writes the RDD its collect job already ran ([[ofRdd]], the
+ * `Dataset.checkpoint` pattern) so that the producer's shuffle map
+ * stages are not run again. Pin also compresses its collect payload with the session's io
  * codec through here, as Spark's own collect does. Nothing else may go
  * through here.
  */

@@ -228,6 +228,44 @@ class GraphLawsSpec extends SparkTestBase {
     })
   }
 
+  test("property: each Superstep program gives the same states on the " +
+      "driver and the distributed executor") {
+    // the engine's differential: every ported program, on random
+    // parity-directed graphs (cycles, so topo truncation bites) and
+    // round caps from 1 up to past convergence, must leave the same
+    // (id, state) on both executors — the per-operator readouts are
+    // plain projections of these states
+    def isLocal(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def same(p: graft.ops.Superstep[_], e: org.apache.spark.sql.DataFrame,
+        rounds: Int): Boolean = {
+      val local = p.run(e, rounds, "laws")
+      val dist = withConf("spark.graft.maxLocalEdges" -> "0")(p.run(e, rounds, "laws"))
+      assert(isLocal(local) && !isLocal(dist))
+      local.collect().map(_.toSeq).toSet == dist.collect().map(_.toSeq).toSet
+    }
+    def programs(k: Int) =
+      Seq(Graph.kCoreProgram(k), Graph.topoProgram, Graph.coloringProgram)
+    check(Prop.forAll(graphGen, Gen.oneOf(1, 2, 3, 30), Gen.choose(1, 4)) {
+      (es, rounds, k) =>
+        val e = es.toSeq.map { case (a, b) =>
+          if ((a + b) % 2 == 0) (a, b) else (b, a)
+        }.toDF("src", "dst")
+        programs(k).forall(same(_, e, rounds))
+    })
+    // degenerate inputs: no edges, only self-loops, one edge, and a k
+    // above every degree (every node peels in the first round)
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val loops = Seq((1L, 1L), (2L, 2L)).toDF("src", "dst")
+    val single = Seq((1L, 2L)).toDF("src", "dst")
+    for (e <- Seq(empty, loops, single); p <- programs(1))
+      assert(same(p, e, 30), s"$p on ${e.collect().toSeq}")
+    val clique = (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)).toDF("src", "dst")
+    assert(same(Graph.kCoreProgram(5), clique, 30))
+    assert(Graph.kCore(clique, k = 5).count() == 0L)
+  }
+
   test("property: assortativity is a correlation (|r| <= 1); distance histogram is consistent with closeness") {
     check(Prop.forAll(graphGen) { es =>
       es.isEmpty || {

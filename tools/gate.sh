@@ -15,6 +15,13 @@
 #   tools/gate.sh /root/testdata/sf0.1 tmp/verify_sf01 \
 #     CORRECTNESS_SELF_SF01.json "corpus_prepare,graph_betweenness,..."
 #
+# Past-the-gate check: SparkConf reads `spark.*` JVM system properties,
+# so the distributed executors of the graph operators run against the
+# oracle with
+#   JAVA_TOOL_OPTIONS=-Dspark.graft.maxLocalEdges=0 tools/gate.sh \
+#     <sf_dir> tmp/verify_dist CORRECTNESS_SELF.json \
+#     "graph_kcore,graph_toposort,graph_coloring"
+#
 # A filtered run checks a subset, so it never replaces the committed
 # full record: with a filter and the default record path, the subset
 # record goes to <out_dir>/CORRECTNESS_SUBSET.json instead. Name another
