@@ -733,7 +733,9 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    kCoreProgram(k).run(canonicalEdges(edges), maxRounds + 1, "kcore")
+    // one superstep past the last peel round (Int.MaxValue: to the fixpoint)
+    kCoreProgram(k).run(canonicalEdges(edges), math.min(maxRounds, Int.MaxValue - 1) + 1,
+      "kcore")
       .filter(col("state") > 0L)
       .select(col("id").as("node"), col("state").as("degree"))
   }
@@ -765,7 +767,8 @@ object Graph {
     * One [[graft.ops.Superstep]] program ([[topoProgram]]) along the
     * distinct out edges: per round, each unresolved node sends 1 along
     * its out edges, and a node that hears none takes the round's layer.
-    * Self-loops keep their node unresolved. */
+    * Self-loops keep their node unresolved; an edge with a null end is
+    * dropped. */
   def topoLayers(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     topoProgram.run(edges.select(col("src"), col("dst")).distinct(), maxRounds, "topo")

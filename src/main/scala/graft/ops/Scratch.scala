@@ -33,7 +33,7 @@ object Scratch {
     val spark = df.sparkSession
     val path = dir(spark.conf.getOption("spark.graft.scratchDir"), prefix)
     df.write.mode("overwrite").parquet(path)
-    (spark.read.parquet(path), path)
+    (scan(df, path), path)
   }
 
   /** Like `materialize`, but also computes aggregate `metrics` over the
@@ -107,8 +107,13 @@ object Scratch {
     val marker = new org.apache.hadoop.fs.Path(path, observedMarker)
     marker.getFileSystem(spark.sessionState.newHadoopConf())
       .create(marker, true).close()
-    (spark.read.parquet(path), obs.get, path)
+    (scan(df, path), obs.get, path)
   }
+
+  /** A scan of the table `df` was written to. The written schema is
+    * known, so the read skips parquet's schema inference (one job). */
+  private def scan(df: DataFrame, path: String): DataFrame =
+    df.sparkSession.read.schema(df.schema).parquet(path)
 
   /** Delete a scratch table eagerly (any Hadoop-FS scheme). Callers must
     * only drop paths whose LAST reader has finished — a dropped table's

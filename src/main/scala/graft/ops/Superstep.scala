@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.functions.{array_sort, coalesce, col, collect_set, count, lit, min, sum, when}
+import org.apache.spark.sql.functions.{array_sort, coalesce, col, collect_set, count, lit, max,
+  monotonically_increasing_id, sum, when}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /**
@@ -19,22 +20,26 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
  *
  * Every endpoint of an edge is a vertex and starts at `init`. In round
  * r (from 1) each vertex sends `send(state, true)` along its out edges
- * (to each edge's dst) and/or `send(state, false)` along its in edges
- * (to each edge's src), as `direction` says; a send of [[Superstep.Silent]]
- * sends nothing. A vertex's messages reduce through `combine` (its zero
- * when none arrive) and `update(state, combined, r)` is its next state,
- * all computed from the states the round started with. The program
- * halts when a round changes no vertex, or after `maxRounds` rounds.
+ * (to each edge's dst) and, when `direction` is [[Superstep.Both]],
+ * `send(state, false)` along its in edges (to each edge's src); a send
+ * of [[Superstep.Silent]] sends nothing. A vertex's messages reduce
+ * through `combine` (its zero when none arrive) and
+ * `update(state, combined, r)` is its next state, all computed from the
+ * states the round started with. The program halts when a round changes
+ * no vertex, or after `maxRounds` rounds.
  *
  * [[run]] places the edge frame with [[Pin.place]], and the placement
  * picks the executor. Pinned edges run on the driver over a CSR of
  * primitive longs read from the pinned UnsafeRows; the result is a
  * local relation. Spilled edges run Pregelix's full-round plan: per
- * round, edges ⋈ the senders' messages, one grouped aggregate, and a
- * vertex table written to scratch with the changed-vertex count
- * observed on that write. Both executors compute the same states: the
- * combiners are exact and order-free, and send/update are the same
- * Scala functions (typed Dataset ops run them on the executors).
+ * round, the edges ⋈ the senders' messages, unioned with the vertex
+ * table into one grouped aggregate (one shuffle), and a new vertex
+ * table, holding each vertex's next sends, written to scratch with the
+ * changed-vertex count observed on that write; round 1 needs no join,
+ * since every vertex sends init's messages. Both executors compute
+ * the same states: the combiners are exact and order-free, and
+ * send/update are the same Scala functions (typed Dataset ops run them
+ * on the executors).
  */
 final case class Superstep[M](
     direction: Superstep.Direction,
@@ -44,24 +49,39 @@ final case class Superstep[M](
     update: (Long, M, Int) => Long) {
   import Superstep._
 
-  /** The final (id, state) of every endpoint of `edges` (integral
-    * `src`, `dst`; ids come back in `src`'s type). Scratch tables
-    * written on the way are dropped, except the one the result reads. */
+  /** The final (id, state) of every endpoint of `edges`, ids in
+    * `src`'s type; an edge with a null endpoint is dropped. Integral ids
+    * run as longs; other ids are numbered first, by a placed table of
+    * (key, id) that is joined in and back. Scratch tables written on the
+    * way are dropped, except those the result reads. */
   def run(edges: DataFrame, maxRounds: Int, tag: String): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val idType = edges.schema("src").dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
-      s"Superstep ids must be integral, got $idType")
-    val placed = Pin.place(edges.select(col("src").cast(LongType).as("src"),
-      col("dst").cast(LongType).as("dst")), s"${tag}_edges")
-    val states = Option(placed.pinned) match {
+    val e = edges.select(col("src"), col("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val idType = e.schema("src").dataType
+    if (Seq(LongType, IntegerType, ShortType, ByteType).contains(idType)) {
+      val states = runLongs(e.select(col("src").cast(LongType).as("src"),
+        col("dst").cast(LongType).as("dst")), maxRounds, tag)
+      if (idType == LongType) states
+      else states.select(col("id").cast(idType).as("id"), col("state"))
+    } else {
+      val keys = Pin.place(e.select(col("src").as("key")).union(e.select(col("dst").as("key")))
+        .distinct().withColumn("id", monotonically_increasing_id()), s"${tag}_ids").df
+      def number(end: String) = keys.select(col("key").as(end), col("id").as(s"${end}_id"))
+      runLongs(e.join(number("src"), "src").join(number("dst"), "dst")
+        .select(col("src_id").as("src"), col("dst_id").as("dst")), maxRounds, tag)
+        .join(keys, "id").select(col("key").as("id"), col("state"))
+    }
+  }
+
+  private def runLongs(edges: DataFrame, maxRounds: Int, tag: String): DataFrame = {
+    val placed = Pin.place(edges, s"${tag}_edges")
+    Option(placed.pinned) match {
       case Some(rows) => onDriver(placed.df.sparkSession, rows, maxRounds)
       case None =>
         try distributed(placed.df, maxRounds, tag)
         finally Scratch.drop(placed.df.sparkSession, placed.path)
     }
-    if (idType == LongType) states
-    else states.select(col("id").cast(idType).as("id"), col("state"))
   }
 
   private def onDriver(spark: SparkSession, rows: Array[InternalRow],
@@ -81,22 +101,20 @@ final case class Superstep[M](
     val n = ids.length
     // senders per receiver: along out edges a dst hears its srcs, along
     // in edges a src hears its dsts
-    val fromOut = if (direction == In) null else Csr(d, s, n)
-    val fromIn = if (direction == Out) null else Csr(s, d, n)
-    val buf = new Array[Long](Seq(fromOut, fromIn).filter(_ != null)
-      .map(_.maxDegree).sum)
+    val fromOut = Csr(d, s, n)
+    val fromIn = if (direction == Both) Csr(s, d, n) else null
+    val buf = new Array[Long](fromOut.maxDegree + (if (fromIn == null) 0 else fromIn.maxDegree))
     var state = Array.fill(n)(init)
     var round = 1
     var changed = true
     while (changed && round <= maxRounds) {
-      val out = if (fromOut == null) null else state.map(send(_, true))
+      val out = state.map(send(_, true))
       val in = if (fromIn == null) null else state.map(send(_, false))
       val next = new Array[Long](n)
       changed = false
       var v = 0
       while (v < n) {
-        var len = 0
-        if (fromOut != null) len = fromOut.gather(v, out, buf, len)
+        var len = fromOut.gather(v, out, buf, 0)
         if (fromIn != null) len = fromIn.gather(v, in, buf, len)
         next(v) = update(state(v), combine.reduce(buf, len), round)
         changed ||= next(v) != state(v)
@@ -120,39 +138,52 @@ final case class Superstep[M](
   private def distributed(edges: DataFrame, maxRounds: Int, tag: String): DataFrame = {
     val spark = edges.sparkSession
     val (snd, upd) = (send, update)
+    // each edge once per direction it carries messages in, flagged with
+    // which of the sender's two messages it carries
+    val arcs = {
+      val out = edges.select(col("src"), col("dst"), lit(true).as("fwd"))
+      if (direction == Out) out
+      else out.union(edges.select(col("dst").as("src"), col("src").as("dst"), lit(false).as("fwd")))
+    }
+    val sends = if (direction == Out) col("out") =!= Silent
+      else col("out") =!= Silent || col("in") =!= Silent
+    // round 1: every endpoint holds `init` (the grouping below folds the
+    // repeats) and sends init's messages, which need no join; later
+    // rounds join the sends each vertex row carries from its update
     var v = edges.select(col("src").as("id")).union(edges.select(col("dst").as("id")))
-      .distinct().select(col("id"), lit(init).as("state"))
+      .select(col("id"), lit(init).as("state"))
+    var msgs = arcs.select(col("dst").as("id"),
+      when(col("fwd"), lit(snd(init, true))).otherwise(lit(snd(init, false))).as("msg"))
     var path: String = null
     var round = 1
     var changed = true
     while (changed && round <= maxRounds) {
       val r = round
-      val sent = v.as(longs2).map { case (id, s) => (id, snd(s, true), snd(s, false)) }(longs3)
-        .toDF("id", "out", "in")
-      def along(from: String, to: String, msg: String): DataFrame =
-        edges.join(sent.filter(col(msg) =!= Silent)
-          .select(col("id").as(from), col(msg).as("msg")), from)
-          .select(col(to).as("id"), col("msg"))
-      val msgs = direction match {
-        case Out => along("src", "dst", "out")
-        case In => along("dst", "src", "in")
-        case Both => along("src", "dst", "out").union(along("dst", "src", "in"))
-      }
-      val next = v
-        .join(msgs.groupBy(col("id")).agg(combine.agg(col("msg")).as("msg")), Seq("id"), "left")
+      if (r > 1) msgs = arcs
+        .join(v.filter(sends).select(col("id").as("src"), col("out"), col("in")), "src")
+        .select(col("dst").as("id"), when(col("fwd"), col("out")).otherwise(col("in")).as("msg"))
+      // one shuffle: the vertex rows and their messages group together
+      val next = v.select(col("id"), col("state"), lit(null).cast(LongType).as("msg"))
+        .union(msgs.filter(col("msg") =!= Silent)
+          .select(col("id"), lit(null).cast(LongType).as("state"), col("msg")))
+        .groupBy(col("id")).agg(max(col("state")).as("state"), combine.agg(col("msg")).as("msg"))
         .select(col("id"), col("state"), coalesce(col("msg"), lit(combine.zero)).as("msg"))
         .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, combine.encoder))
-        .map { case (id, s, m) => (id, upd(s, m, r), s) }(longs3)
-        .toDF("id", "state", "prev")
+        .map { case (id, s, m) =>
+          val t = upd(s, m, r)
+          (id, t, s, snd(t, true), snd(t, false))
+        }(longs5)
+        .toDF("id", "state", "prev", "out", "in")
       val (scan, observed, p) = Scratch.materializeObservedAt(next, s"${tag}_vertices",
         count(when(col("state") =!= col("prev"), 1)).as("changed"))
+      val n = observed("changed").asInstanceOf[Long]
       Scratch.drop(spark, path)
-      v = scan.select(col("id"), col("state"))
+      v = scan
       path = p
-      changed = observed("changed").asInstanceOf[Long] > 0L
+      changed = n > 0L
       round += 1
     }
-    v
+    v.select(col("id"), col("state"))
   }
 }
 
@@ -163,7 +194,6 @@ object Superstep {
 
   sealed trait Direction
   case object Out extends Direction
-  case object In extends Direction
   case object Both extends Direction
 
   /** A combiner: one Catalyst aggregate on the distributed executor,
@@ -183,12 +213,6 @@ object Superstep {
     }
   }
 
-  object Min extends Combine[Long](Long.MaxValue, Encoders.scalaLong) {
-    def agg(msg: Column): Column = min(msg)
-    def reduce(msgs: Array[Long], n: Int): Long =
-      java.util.Arrays.stream(msgs, 0, n).min().orElse(Long.MaxValue)
-  }
-
   /** The sorted distinct set of the messages. */
   object Distinct
       extends Combine[Array[Long]](Array.emptyLongArray, ExpressionEncoder[Array[Long]]()) {
@@ -199,8 +223,8 @@ object Superstep {
 
   private val schema = StructType(Seq(StructField("id", LongType, nullable = false),
     StructField("state", LongType, nullable = false)))
-  private val longs2 = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-  private val longs3 = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+  private val longs5 = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong,
+    Encoders.scalaLong, Encoders.scalaLong)
 
   /** Compressed rows: the senders heard by each receiver. */
   private final case class Csr(offsets: Array[Int], senders: Array[Int]) {

@@ -254,16 +254,23 @@ class GraphLawsSpec extends SparkTestBase {
         }.toDF("src", "dst")
         programs(k).forall(same(_, e, rounds))
     })
-    // degenerate inputs: no edges, only self-loops, one edge, and a k
+    // degenerate inputs: no edges, only self-loops, one edge, edges
+    // with a null end (dropped, so the single edge's states), and a k
     // above every degree (every node peels in the first round)
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     val loops = Seq((1L, 1L), (2L, 2L)).toDF("src", "dst")
     val single = Seq((1L, 2L)).toDF("src", "dst")
-    for (e <- Seq(empty, loops, single); p <- programs(1))
+    val nulls = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, null), (null, 3L), (null, null)).toDF("src", "dst")
+    for (e <- Seq(empty, loops, single, nulls); p <- programs(1))
       assert(same(p, e, 30), s"$p on ${e.collect().toSeq}")
+    for (p <- programs(1))
+      assert(p.run(nulls, 30, "laws").collect().toSet == p.run(single, 30, "laws").collect().toSet)
     val clique = (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)).toDF("src", "dst")
     assert(same(Graph.kCoreProgram(5), clique, 30))
     assert(Graph.kCore(clique, k = 5).count() == 0L)
+    // Int.MaxValue rounds means "to the fixpoint"
+    assert(Graph.kCore(clique, k = 4, maxRounds = Int.MaxValue).count() == 5L)
   }
 
   test("property: assortativity is a correlation (|r| <= 1); distance histogram is consistent with closeness") {

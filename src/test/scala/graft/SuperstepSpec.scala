@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Graph
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Scratch hygiene of the [[graft.ops.Superstep]] peel operators past
   * the driver gate: the distributed executor drops every superseded
@@ -23,18 +24,43 @@ class SuperstepSpec extends SparkTestBase {
       "kCore" -> (Graph.kCore(_, 2)),
       "topoLayers" -> (Graph.topoLayers(_)),
       "greedyColoring" -> (Graph.greedyColoring(_))).flatMap { case (name, op) =>
-      withConf("spark.graft.maxLocalEdges" -> "0") {
+      // string ids also write the table that numbers them, which the
+      // result reads back
+      val named = e.select(col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
+      Seq(e, named).flatMap(input => withConf("spark.graft.maxLocalEdges" -> "0") {
         val before = tables()
-        val out = op(e)
+        val out = op(input)
         assert(out.collect().nonEmpty)
         val read = out.inputFiles.map(f =>
           new java.io.File(new java.net.URI(f)).getParentFile.getCanonicalPath).toSet
         val left = tables() -- before
         if (read.nonEmpty && left == read) None
-        else Some(s"$name left ${left.map(new java.io.File(_).getName)}, " +
+        else Some(s"$name on ${input.schema("src").dataType} ids left " +
+          s"${left.map(new java.io.File(_).getName)}, " +
           s"its result reads ${read.map(new java.io.File(_).getName)}")
-      }
+      })
     }
     assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
+  test("string ids: kCore / topoLayers / greedyColoring equal the Long-id run, relabeled") {
+    // zero-padded labels keep the id order, which greedyColoring's
+    // priority and the canonical (src < dst) edges read
+    def label(id: Long) = f"n$id%03d"
+    val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 3L), (6L, 6L))
+    val ids = e.toDF("src", "dst")
+    val names = e.map { case (a, b) => (label(a), label(b)) }.toDF("src", "dst")
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+        "kCore" -> (Graph.kCore(_, 2)),
+        "topoLayers" -> (Graph.topoLayers(_)),
+        "greedyColoring" -> (Graph.greedyColoring(_)))) {
+      val want = op(ids).collect().map(r => (label(r.getLong(0)), r.get(1))).toSet
+      for (bound <- Seq("1000000", "0")) withConf("spark.graft.maxLocalEdges" -> bound) {
+        val got = op(names)
+        assert(got.schema.head.dataType == org.apache.spark.sql.types.StringType)
+        assert(got.collect().map(r => (r.getString(0), r.get(1))).toSet == want,
+          s"$name, maxLocalEdges=$bound")
+      }
+    }
   }
 }
