@@ -127,8 +127,6 @@ object Corpus {
           .agg(min(col("label")).as("label")),
         "cc_labels", witness)
       val s = m("label_sum")
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round ${it + 1}: sum $prevSum -> $s")
       // the superseded labels table was fully consumed by the write job
       // that just finished — retire its files now, not at JVM exit
       Scratch.drop(pairs.sparkSession, labelsPath)
@@ -138,8 +136,6 @@ object Corpus {
       prevSum = s
       it += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged after $it propagation rounds")
     // the edge table fed its last propagation round; only the final
     // labels table (the returned scan) outlives the call
     Scratch.drop(pairs.sparkSession, pPath)

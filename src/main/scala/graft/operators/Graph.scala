@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+
+import graft.ops.LocalGraph
 
 /**
  * Graph analytics over an edge table — the natural downstream of the
@@ -444,8 +447,8 @@ object Graph {
   /** Weakly connected components over the undirected edge set: every
     * node that appears in an edge, labeled with its component's minimum
     * node id. Delegates to the corpus CC engine
-    * ([[Corpus.connectedComponents]]): observed-count-gated driver
-    * union-find for small pair lists, pointer-jumping min-label
+    * ([[Corpus.connectedComponents]]): a driver union-find when
+    * [[graft.ops.Pin.place]] pins the pair list, pointer-jumping min-label
     * propagation over scratch tables (O(log diameter) rounds,
     * constant-size plans) beyond the threshold — the same loop
     * discipline PageRank uses. */
@@ -475,7 +478,7 @@ object Graph {
    * reachability composes, so label² is a valid O(log diameter)
    * accelerator), with an EXACT no-change witness (labels only
    * decrease; an unchanged DECIMAL(38,0) label sum proves fixpoint).
-   * Nothing driver-side beyond the observed-count loop gates; nothing
+   * Nothing driver-side past [[graft.ops.Pin.place]]'s gate; nothing
    * broadcast that is O(graph). Self-loops drop (v is trivially in its
    * own SCC); every node appears exactly once in the output.
    *
@@ -498,8 +501,7 @@ object Graph {
     // reproduces the FW-BW result exactly — and at bench scale the
     // FW-BW loop's ~40 write jobs are pure stage scheduling. Long ids
     // only.
-    localEdgePairs(placed).foreach(pairs =>
-      return longPairFrame(spark, sccLocal(pairs), "node", "scc_id"))
+    LocalGraph.of(placed).foreach(g => return sccLocal(spark, g))
     var (e, ePath) = (placed.df, placed.path)
     var (nodes, mn, nodesPath) = Scratch.materializeObservedAt(
       e.select(col("src").as("node"))
@@ -538,14 +540,14 @@ object Graph {
       val open = nc.filter(col("f") =!= col("b"))
       val (nodes2, mn2, nodesPath2) = Scratch.materializeObservedAt(
         open.select(col("node")), "scc_nodes", count(lit(1)).as("n"))
-      val (e2, me2, ePath2) = Scratch.materializeObservedAt(
+      val (e2, ePath2) = Scratch.materializeAt(
         e.join(open.select(col("node").as("src"), col("f").as("fs"), col("b").as("bs")),
             Seq("src"))
           .join(open.select(col("node").as("dst"), col("f").as("fd"), col("b").as("bd")),
             Seq("dst"))
           .filter(col("fs") === col("fd") && col("bs") === col("bd"))
           .select(col("src"), col("dst")),
-        "scc_edges", count(lit(1)).as("n"))
+        "scc_edges")
       Scratch.drop(spark, nodesPath)
       Scratch.drop(spark, ePath)
       nodes = nodes2; nodesPath = nodesPath2
@@ -554,7 +556,6 @@ object Graph {
       require(nResolved > 0 || nNodes == 0,
         "stronglyConnectedComponents made no progress - impossible for " +
           "a fixpointed (f, b) class table; check the edge derivation")
-      val _unused = me2 // edge count observed for free; the loop keys on nodes
       outer += 1
     }
     require(nNodes == 0,
@@ -681,14 +682,12 @@ object Graph {
     // order, and a Long-tally replay is bit-identical (unweighted w≡1
     // always qualifies; co-occurrence counts qualify; fractional
     // weights keep the distributed loop).
-    if (adj.schema("n").dataType == org.apache.spark.sql.types.LongType)
-      placed.rows.map(_.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))) match {
-        case Some(triples) if triples.map(_._3).sum <= 4503599627370496.0d && // 2^52
-            triples.forall(t => t._3 == math.floor(t._3) &&
-              math.abs(t._3) < 4503599627370496.0d) =>
-          return lpaLocal(spark, triples, rounds)
-        case _ =>
-      }
+    LocalGraph.of(placed).foreach { g =>
+      val w = Array.tabulate(g.m)(g.double(_, 2))
+      if (w.sum <= 4503599627370496.0d && // 2^52
+          w.forall(x => x == math.floor(x) && math.abs(x) < 4503599627370496.0d))
+        return lpaLocal(spark, g, w.map(_.toLong), rounds)
+    }
     var labels = adj.select(col("n").as("node")).distinct()
       .withColumn("label", col("node"))
     var labelsPath: String = null // round 0 is a projection of adj
@@ -861,23 +860,7 @@ object Graph {
     // pinned local replay of the synchronous rounds (the louvain
     // switchover): same both-ends-minimal waves under the canonical
     // order, same null-round residual contract
-    localEdgePairs(placed) match {
-      case Some(pairs) =>
-        val result = matchingLocal(pairs, maxRounds)
-        val jrows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(result.map(r =>
-            org.apache.spark.sql.Row(r._1, r._2,
-              r._3.map(Long.box).orNull)): _*)
-        return spark.createDataFrame(jrows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("src",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("dst",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("round",
-              org.apache.spark.sql.types.LongType, nullable = true))))
-      case None =>
-    }
+    LocalGraph.of(placed).foreach(g => return matchingLocal(spark, g, maxRounds))
     val matched = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
     var done = false
@@ -1022,26 +1005,10 @@ object Graph {
     // per-edge support is the all-integer triangle count |N(u)∩N(v)|,
     // the peel and round cap replicate exactly, so the local replay is
     // value-exact; each distributed round's wedge-join + two observed
-    // writes collapse to in-memory set intersections. Round 13 measured
+    // writes collapse to an in-memory triangle listing. Round 13 measured
     // the per-round fanOutByKey variant a net LOSS here (shrinking peel
     // rounds); the local replay removes the rounds altogether.
-    localEdgePairs(placed) match {
-      case Some(pairs) =>
-        val result = kTrussLocal(pairs, minSup, maxRounds)
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(result.map { case (s, d, sup) =>
-            org.apache.spark.sql.Row(s, d, sup)
-          }: _*)
-        return spark.createDataFrame(rows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("src",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("dst",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("support",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      case None =>
-    }
+    LocalGraph.of(placed).foreach(g => return kTrussLocal(spark, g, minSup, maxRounds))
     var rounds = 0
     var converged = n == 0L
     while (!converged && rounds < maxRounds) {
@@ -1340,24 +1307,20 @@ object Graph {
         // driver-local replay: Σ over reached t of the SAME 9-dp term
         // under an exact decimal sum, one accumulator per source —
         // never a ball table (see tryLocalBalls)
-        val dist = Array.fill(g.ids.length)(-1)
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(g.seeds.map { s =>
-            val order = localBfs(g, s, maxHops, dist)
-            var acc = java.math.BigDecimal.ZERO
-            order.foreach { v =>
-              if (dist(v) > 0)
-                acc = acc.add(decTerm(roundD(1.0d / dist(v), 9), 9))
-            }
-            order.foreach(dist(_) = -1)
-            org.apache.spark.sql.Row(g.ids(s), acc.doubleValue)
-          }: _*)
-        spark.createDataFrame(rows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("centrality",
-              org.apache.spark.sql.types.DoubleType, nullable = true))))
+        val dist = Array.fill(g.graph.n)(-1)
+        LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+            StructField("centrality", DoubleType))), g.seeds.length) { (w, i) =>
+          val s = g.seeds(i)
+          val order = localBfs(g, s, maxHops, dist)
+          var acc = java.math.BigDecimal.ZERO
+          order.foreach { v =>
+            if (dist(v) > 0)
+              acc = acc.add(decTerm(roundD(1.0d / dist(v), 9), 9))
+          }
+          order.foreach(dist(_) = -1)
+          w.write(0, g.graph.ids(s))
+          w.write(1, acc.doubleValue)
+        }
       case None =>
         val dist = bfsDistances(adj, maxHops, sources, "harm")
         graft.ops.Scratch.drop(spark, adjPath)
@@ -1390,27 +1353,22 @@ object Graph {
       case Some(g) =>
         // driver-local replay: integer reached/dist sums + the same
         // one 6-dp division — bit-exact by construction
-        val dist = Array.fill(g.ids.length)(-1)
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(g.seeds.map { s =>
-            val order = localBfs(g, s, maxHops, dist)
-            var reached = 0L
-            var sumDist = 0L
-            order.foreach { v =>
-              if (dist(v) > 0) { reached += 1L; sumDist += dist(v) }
-            }
-            order.foreach(dist(_) = -1)
-            org.apache.spark.sql.Row(g.ids(s), reached,
-              roundD(reached.toDouble / sumDist.toDouble, 6))
-          }: _*)
-        spark.createDataFrame(rows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("reached",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("closeness",
-              org.apache.spark.sql.types.DoubleType, nullable = true))))
+        val dist = Array.fill(g.graph.n)(-1)
+        LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+            StructField("reached", LongType, nullable = false),
+            StructField("closeness", DoubleType))), g.seeds.length) { (w, i) =>
+          val s = g.seeds(i)
+          val order = localBfs(g, s, maxHops, dist)
+          var reached = 0L
+          var sumDist = 0L
+          order.foreach { v =>
+            if (dist(v) > 0) { reached += 1L; sumDist += dist(v) }
+          }
+          order.foreach(dist(_) = -1)
+          w.write(0, g.graph.ids(s))
+          w.write(1, reached)
+          w.write(2, roundD(reached.toDouble / sumDist.toDouble, 6))
+        }
       case None =>
         val dist = bfsDistances(adj, maxHops, sources, "close")
         graft.ops.Scratch.drop(spark, adjPath)
@@ -1530,11 +1488,12 @@ object Graph {
       spark: org.apache.spark.sql.SparkSession,
       g: LocalBalls,
       maxHops: Int): DataFrame = {
-    val n = g.ids.length
+    val n = g.graph.n
+    val adj = g.graph.out
     val dist = Array.fill(n)(-1)
     val sigma = new Array[Long](n)
     val delta = new Array[Double](n)
-    val score = new java.util.HashMap[Int, java.math.BigDecimal]()
+    val score = new Array[java.math.BigDecimal](n)
     g.seeds.foreach { s =>
       // forward: level-synchronous BFS; σw sums every level-(h-1)
       // predecessor's σ (first discovery seeds it, re-discovery at the
@@ -1546,10 +1505,9 @@ object Graph {
       while (lo < order.length) {
         val v = order(lo); lo += 1
         if (dist(v) < maxHops) {
-          val ns = g.adj(v)
-          var i = 0
-          while (i < ns.length) {
-            val w = ns(i)
+          var i = adj.offsets(v)
+          while (i < adj.offsets(v + 1)) {
+            val w = adj.targets(i)
             if (dist(w) < 0) {
               dist(w) = dist(v) + 1; sigma(w) = sigma(v); order += w
             } else if (dist(w) == dist(v) + 1) {
@@ -1564,10 +1522,9 @@ object Graph {
       for (h <- maxHops - 1 to 0 by -1) {
         byLevel.getOrElse(h, Nil).foreach { v =>
           var dep = java.math.BigDecimal.ZERO
-          val ns = g.adj(v)
-          var i = 0
-          while (i < ns.length) {
-            val w = ns(i)
+          var i = adj.offsets(v)
+          while (i < adj.offsets(v + 1)) {
+            val w = adj.targets(i)
             if (dist(w) == h + 1)
               dep = dep.add(decTerm(
                 roundD(1.0d / sigma(w).toDouble * (1.0d + delta(w)), 9), 12))
@@ -1575,25 +1532,19 @@ object Graph {
           }
           delta(v) = roundD(sigma(v).toDouble * dep.doubleValue, 9)
           if (v != s) {
-            val prev = score.getOrDefault(v, java.math.BigDecimal.ZERO)
-            score.put(v, prev.add(decTerm(delta(v), 12)))
+            val prev = if (score(v) == null) java.math.BigDecimal.ZERO else score(v)
+            score(v) = prev.add(decTerm(delta(v), 12))
           }
         }
       }
       order.foreach { v => dist(v) = -1; sigma(v) = 0L; delta(v) = 0.0d }
     }
-    val keys = score.keySet().toArray(Array.empty[Integer]).map(_.intValue).sorted
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(keys.map { v =>
-        org.apache.spark.sql.Row(g.ids(v),
-          roundD(score.get(v).doubleValue, 6))
-      }: _*)
-    spark.createDataFrame(rows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("betweenness",
-          org.apache.spark.sql.types.DoubleType, nullable = true))))
+    val scored = (0 until n).filter(score(_) != null)
+    LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("betweenness", DoubleType))), scored.length) { (w, i) =>
+      w.write(0, g.graph.ids(scored(i)))
+      w.write(1, roundD(score(scored(i)).doubleValue, 6))
+    }
   }
 
   /** Place the symmetrized adjacency of the landmark-BFS family with
@@ -1605,11 +1556,10 @@ object Graph {
       .union(e0.select(col("dst").as("src"), col("src").as("dst"))), s"${prefix}_adj")
   }
 
-  /** Driver-local rendition of the landmark-ball family's graph:
-    * int-indexed adjacency (both directions present, mirroring the
-    * symmetrized scratch table row for row) + the seed indexes. */
-  private final case class LocalBalls(
-      ids: Array[Long], adj: Array[Array[Int]], seeds: Array[Int])
+  /** Driver-local rendition of the landmark-ball family's graph: the
+    * symmetrized adjacency (so `graph.out` holds both directions) and
+    * the seed indexes. */
+  private final case class LocalBalls(graph: LocalGraph, seeds: Array[Int])
 
   /** Pinned driver-local switchover for the landmark-ball
     * family (harmonic / closeness / distance-distribution /
@@ -1634,114 +1584,70 @@ object Graph {
     if (sources.isEmpty) return None
     val src = sources.get
     val seeds0 = src.select(col(src.columns.head).as("s")).distinct()
-    if (seeds0.schema("s").dataType != org.apache.spark.sql.types.LongType)
+    if (seeds0.schema("s").dataType != LongType)
       return None
     val seedCap = 100000
-    localEdgePairs(adj).flatMap { pairs =>
+    LocalGraph.of(adj).flatMap { g =>
       val seedArr = seeds0.limit(seedCap + 1).collect().map(_.getLong(0))
       if (seedArr.length > seedCap || seedArr.length.toLong * adj.count > 512000000L) None
       else {
-        val (ids, adj, idx) = indexPairs(pairs)
         // landmark ids absent from the graph drop (no edges → no ball),
         // matching the distributed seed semi-join; sorted for reproducible
         // processing order (the sums are order-exact regardless)
-        val seeds = seedArr.filter(idx.containsKey(_)).sorted.map(idx.get(_))
-        Some(LocalBalls(ids, adj, seeds))
+        val seeds = seedArr.filter(g.indexOf(_) >= 0).sorted.map(g.indexOf)
+        Some(LocalBalls(g, seeds))
       }
     }
   }
 
-  /** Int-index a collected (src, dst) pair table: (sorted node ids,
-    * out-adjacency arrays mirroring the pairs row for row, id→index). */
-  private def indexPairs(pairs: Array[(Long, Long)])
-      : (Array[Long], Array[Array[Int]], java.util.HashMap[Long, Int]) = {
-    val ids = pairs.flatMap(p => Array(p._1, p._2)).distinct.sorted
-    val idx = new java.util.HashMap[Long, Int](ids.length * 2)
-    ids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
-    val deg = new Array[Int](ids.length)
-    pairs.foreach { case (a, _) => deg(idx.get(a)) += 1 }
-    val adj = Array.tabulate(ids.length)(i => new Array[Int](deg(i)))
-    val fill = new Array[Int](ids.length)
-    pairs.foreach { case (a, b) =>
-      val i = idx.get(a); adj(i)(fill(i)) = idx.get(b); fill(i) += 1
-    }
-    (ids, adj, idx)
-  }
-
-  /** Driver-local index of a pinned (src, dst) pair frame for the
-    * power-iteration replays (eigenvector / HITS / Katz): the
-    * [[tryLocalBalls]] gate minus the landmark dial — the iteration
-    * count bounds the work, so only the Pin gate and Long ids gate.
-    * State is O(V + E); nothing O(iterations·E) ever materializes. */
-  private def tryLocalPairs(
-      adj: graft.ops.Pin.Placed): Option[(Array[Long], Array[Array[Int]])] =
-    localEdgePairs(adj).map { pairs =>
-      val (ids, adj, _) = indexPairs(pairs)
-      (ids, adj)
-    }
-
   /** Driver-local synchronous LPA replay for [[labelPropagation]]'s
-    * gated fast path: Long vote tallies (exactly the distributed
+    * gated fast path over the symmetrized adjacency `g` with integer
+    * weights `w` per edge: Long vote tallies (exactly the distributed
     * double sums — the gate proved every weight integer-valued and the
     * total under 2^52), max-vote then min-label tie-break per round,
     * every adjacency node relabeled each round (sym adjacency ⇒ every
-    * node receives votes). */
+    * node receives votes). A label is a node id, kept as the index of
+    * its node. */
   private def lpaLocal(
       spark: org.apache.spark.sql.SparkSession,
-      triples: Array[(Long, Long, Double)],
+      g: LocalGraph,
+      w: Array[Long],
       rounds: Int): DataFrame = {
-    val (ids, _, idx) = indexPairs(triples.map(t => (t._1, t._2)))
-    val n = ids.length
-    val srcI = new Array[Int](triples.length)
-    val dstI = new Array[Int](triples.length)
-    val wL = new Array[Long](triples.length)
-    var i = 0
-    while (i < triples.length) {
-      srcI(i) = idx.get(triples(i)._1)
-      dstI(i) = idx.get(triples(i)._2)
-      wL(i) = triples(i)._3.toLong
-      i += 1
-    }
-    var label = Array.tabulate(n)(v => ids(v))
+    val adj = g.out
+    val votes = new Array[Long](g.n)
+    val voter = Array.fill(g.n)(-1) // the node whose votes `votes(l)` holds
+    val voted = new Array[Int](adj.maxDegree)
+    var label = Array.tabulate(g.n)(v => v)
     for (_ <- 1 to rounds) {
-      // per-node vote histogram: label -> summed weight
-      val votes = Array.fill(n)(
-        new java.util.HashMap[java.lang.Long, java.lang.Long]())
-      var e = 0
-      while (e < triples.length) {
-        val node = srcI(e)
-        val l = java.lang.Long.valueOf(label(dstI(e)))
-        val m = votes(node)
-        val prev = m.get(l)
-        m.put(l, if (prev == null) wL(e) else prev + wL(e))
-        e += 1
-      }
-      val next = new Array[Long](n)
+      val next = new Array[Int](g.n)
       var v = 0
-      while (v < n) {
-        val m = votes(v)
-        if (m.isEmpty) next(v) = label(v) // unreachable under sym adj
-        else {
-          var mc = Long.MinValue
-          var ml = Long.MaxValue
-          val it = m.entrySet().iterator()
-          while (it.hasNext) {
-            val en = it.next()
-            val c = en.getValue.longValue
-            val l = en.getKey.longValue
-            if (c > mc || (c == mc && l < ml)) {
-              if (c > mc) { mc = c; ml = l }
-              else if (l < ml) ml = l
-            }
-          }
-          next(v) = ml
+      while (v < g.n) {
+        // per-node vote histogram over the labels its neighbours hold
+        var k = 0
+        var i = adj.offsets(v)
+        while (i < adj.offsets(v + 1)) {
+          val l = label(adj.targets(i))
+          if (voter(l) != v) { voter(l) = v; votes(l) = 0L; voted(k) = l; k += 1 }
+          votes(l) += w(adj.edges(i))
+          i += 1
+        }
+        next(v) = label(v) // kept only when no votes: unreachable under sym adj
+        var mc = Long.MinValue
+        while (k > 0) {
+          k -= 1
+          val l = voted(k)
+          val c = votes(l)
+          if (c > mc || (c == mc && g.ids(l) < g.ids(next(v)))) { mc = c; next(v) = l }
         }
         v += 1
       }
       label = next
     }
-    longPairFrame(spark, ids.indices.map(v => (ids(v), label(v))),
-      "node", "label")
+    LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("label", LongType, nullable = false))), g.n) { (out, v) =>
+      out.write(0, g.ids(v))
+      out.write(1, g.ids(label(v)))
+    }
   }
 
   /** Driver-local FastRP replay for [[fastRP]]'s gated fast path:
@@ -1752,13 +1658,12 @@ object Graph {
     * distributed plan expression for expression. */
   private def fastRpLocal(
       spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(Long, Long)],
+      g: LocalGraph,
       dims: Int,
       iterations: Int,
       iterationWeights: Seq[Double],
       salt: String): DataFrame = {
-    val (ids, ladj, _) = indexPairs(pairs)
-    val n = ids.length
+    val (ids, n, adj) = (g.ids, g.n, g.out)
     def coin(node: Long, dim: Int): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
       val h = md.digest(s"$salt:$node:$dim"
@@ -1775,13 +1680,13 @@ object Graph {
       val avg = Array.ofDim[Double](n, dims)
       var v = 0
       while (v < n) {
-        val ns = ladj(v)
+        val (lo, hi) = (adj.offsets(v), adj.offsets(v + 1))
         var d = 0
         while (d < dims) {
           var s = java.math.BigDecimal.ZERO
-          var i = 0
-          while (i < ns.length) { s = s.add(decTerm(h(ns(i))(d), 12)); i += 1 }
-          avg(v)(d) = roundD(s.doubleValue / ns.length.toDouble, 9)
+          var i = lo
+          while (i < hi) { s = s.add(decTerm(h(adj.targets(i))(d), 12)); i += 1 }
+          avg(v)(d) = roundD(s.doubleValue / (hi - lo).toDouble, 9)
           d += 1
         }
         v += 1
@@ -1806,36 +1711,13 @@ object Graph {
       }
       h = hk
     }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList((for (v <- 0 until n; d <- 0 until dims)
-        yield org.apache.spark.sql.Row(ids(v), d,
-          roundD(acc(v)(d).doubleValue, 6))): _*)
-    spark.createDataFrame(rows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("dim",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType, nullable = true))))
-  }
-
-  /** Reversed adjacency (v → u for every u → v) over int indexes. */
-  private def reverse(adj: Array[Array[Int]], n: Int): Array[Array[Int]] = {
-    val deg = new Array[Int](n)
-    adj.foreach(_.foreach(deg(_) += 1))
-    val rev = Array.tabulate(n)(i => new Array[Int](deg(i)))
-    val fill = new Array[Int](n)
-    var u = 0
-    while (u < adj.length) {
-      val ns = adj(u)
-      var i = 0
-      while (i < ns.length) {
-        val v = ns(i); rev(v)(fill(v)) = u; fill(v) += 1; i += 1
-      }
-      u += 1
+    LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("dim", IntegerType, nullable = false),
+        StructField("value", DoubleType))), n * dims) { (w, i) =>
+      w.write(0, ids(i / dims))
+      w.write(1, i % dims)
+      w.write(2, roundD(acc(i / dims)(i % dims).doubleValue, 6))
     }
-    rev
   }
 
   /** One decimal-exact contribution round of a power iteration:
@@ -1846,7 +1728,7 @@ object Graph {
     * left-join distinction, and the exact L1 total). Only nodes
     * PRESENT in the score table contribute (the join semantics). */
   private def localContribRound(
-      adj: Array[Array[Int]],
+      adj: LocalGraph.Csr,
       score: Array[Double],
       present: Array[Boolean]): (Array[java.math.BigDecimal], java.math.BigDecimal) = {
     val contrib = new Array[java.math.BigDecimal](score.length)
@@ -1854,10 +1736,9 @@ object Graph {
     while (u < score.length) {
       if (present(u)) {
         val term = decTerm(roundD(score(u), 9), 12)
-        val ns = adj(u)
-        var i = 0
-        while (i < ns.length) {
-          val v = ns(i)
+        var i = adj.offsets(u)
+        while (i < adj.offsets(u + 1)) {
+          val v = adj.targets(i)
           contrib(v) = if (contrib(v) == null) term else contrib(v).add(term)
           i += 1
         }
@@ -1899,10 +1780,10 @@ object Graph {
     while (lo < order.length) {
       val v = order(lo); lo += 1
       if (dist(v) < maxHops) {
-        val ns = g.adj(v)
-        var i = 0
-        while (i < ns.length) {
-          val w = ns(i)
+        val adj = g.graph.out
+        var i = adj.offsets(v)
+        while (i < adj.offsets(v + 1)) {
+          val w = adj.targets(i)
           if (dist(w) < 0) { dist(w) = dist(v) + 1; order += w }
           i += 1
         }
@@ -2077,22 +1958,19 @@ object Graph {
       case Some(g) =>
         // driver-local replay: an all-integer hop histogram — only
         // hop values that actually occur emit rows, like the groupBy
-        val dist = Array.fill(g.ids.length)(-1)
+        val dist = Array.fill(g.graph.n)(-1)
         val hist = new Array[Long](maxHops + 1)
         g.seeds.foreach { s =>
           val order = localBfs(g, s, maxHops, dist)
           order.foreach { v => if (dist(v) > 0) hist(dist(v)) += 1L }
           order.foreach(dist(_) = -1)
         }
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList((1 to maxHops).filter(hist(_) > 0L)
-            .map(h => org.apache.spark.sql.Row(h, hist(h))): _*)
-        spark.createDataFrame(rows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("dist",
-              org.apache.spark.sql.types.IntegerType, nullable = false),
-            org.apache.spark.sql.types.StructField("n_pairs",
-              org.apache.spark.sql.types.LongType, nullable = false))))
+        val hops = (1 to maxHops).filter(hist(_) > 0L)
+        LocalGraph.frame(spark, StructType(Seq(StructField("dist", IntegerType, nullable = false),
+            StructField("n_pairs", LongType, nullable = false))), hops.length) { (w, i) =>
+          w.write(0, hops(i))
+          w.write(1, hist(hops(i)))
+        }
       case None =>
         val dist = bfsDistances(adj, maxHops, sources, "dd")
         graft.ops.Scratch.drop(spark, adjPath)
@@ -2132,14 +2010,15 @@ object Graph {
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val e0 = canonicalEdges(edges)
     val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "eig")
-    tryLocalPairs(adjP).foreach { case (ids, ladj) =>
+    LocalGraph.of(adjP).foreach { g =>
       // driver-local replay of the L1-normalized rounds: same 9-dp
       // terms under exact decimal sums, same normalizer, same one
       // IEEE division + 9-dp round per node per round
+      val ids = g.ids
       val score = Array.fill(ids.length)(1.0d)
       val present = Array.fill(ids.length)(true)
       for (_ <- 1 to iters) {
-        val (contrib, l1b) = localContribRound(ladj, score, present)
+        val (contrib, l1b) = localContribRound(g.out, score, present)
         val l1 = l1b.doubleValue
         if (l1 == 0.0d)
           return e0.select(col("src").as("node"),
@@ -2151,16 +2030,12 @@ object Graph {
           v += 1
         }
       }
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(ids.indices.filter(present(_)).map { v =>
-          org.apache.spark.sql.Row(ids(v), score(v))
-        }: _*)
-      return spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("eigenvector",
-            org.apache.spark.sql.types.DoubleType, nullable = true))))
+      val scored = ids.indices.filter(present(_))
+      return LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+          StructField("eigenvector", DoubleType))), scored.length) { (w, i) =>
+        w.write(0, ids(scored(i)))
+        w.write(1, score(scored(i)))
+      }
     }
     var scores = adj.select(col("src").as("node")).distinct()
       .withColumn("score", lit(1.0d))
@@ -2219,20 +2094,20 @@ object Graph {
     val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = graft.ops.Pin.place(
       edges.filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst")).distinct(), "hits_adj")
-    tryLocalPairs(adjP)
-      .foreach { case (ids, fwd) =>
+    LocalGraph.of(adjP)
+      .foreach { g =>
         // driver-local replay of the mutual half-rounds: auth pulls
         // through forward edges from hub, hub pulls through REVERSED
         // edges from auth — same decimal terms, normalizers, rounds.
         // Presence tracks the half-round output tables (a node absent
         // from auth/hub contributes nothing next half and reads 0.0
         // in the final coalesce).
-        val rev = reverse(fwd, ids.length)
+        val ids = g.ids
         var authS = Array.fill(ids.length)(1.0d)
         var authP = Array.fill(ids.length)(true)
         var hubS = Array.fill(ids.length)(1.0d)
         var hubP = Array.fill(ids.length)(true)
-        def half(adjDir: Array[Array[Int]], from: Array[Double],
+        def half(adjDir: LocalGraph.Csr, from: Array[Double],
             fromP: Array[Boolean]): Option[(Array[Double], Array[Boolean])] = {
           val (contrib, l1b) = localContribRound(adjDir, from, fromP)
           val l1 = l1b.doubleValue
@@ -2250,30 +2125,22 @@ object Graph {
           }
         }
         for (_ <- 1 to iters) {
-          half(fwd, hubS, hubP) match {
+          half(g.out, hubS, hubP) match {
             case None =>
               return edges.select(col("src").as("node"),
                 lit(0.0d).as("hub"), lit(0.0d).as("authority")).limit(0)
             case Some((s, p)) => authS = s; authP = p
           }
-          half(rev, authS, authP).foreach { case (s, p) =>
+          half(g.in, authS, authP).foreach { case (s, p) =>
             hubS = s; hubP = p
           }
         }
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(ids.indices.map { v =>
-            org.apache.spark.sql.Row(ids(v),
-              if (hubP(v)) hubS(v) else 0.0d,
-              if (authP(v)) authS(v) else 0.0d)
-          }: _*)
-        return spark.createDataFrame(rows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("hub",
-              org.apache.spark.sql.types.DoubleType, nullable = true),
-            org.apache.spark.sql.types.StructField("authority",
-              org.apache.spark.sql.types.DoubleType, nullable = true))))
+        return LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+            StructField("hub", DoubleType), StructField("authority", DoubleType))), g.n) { (w, v) =>
+          w.write(0, ids(v))
+          w.write(1, if (hubP(v)) hubS(v) else 0.0d)
+          w.write(2, if (authP(v)) authS(v) else 0.0d)
+        }
       }
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct()
@@ -2628,11 +2495,9 @@ object Graph {
     // stage is 9/12-dp terms under order-exact DECIMAL sums plus fixed
     // IEEE ops (one division by the integer degree, one sqrt, the
     // md5-coin init) — all bit-replayable; budget counts edge·dim work
-    if (placed.count * dims * iterations <= 512000000L &&
-        adj.schema("n").dataType == org.apache.spark.sql.types.LongType)
-      placed.rows.foreach(rows =>
-        return fastRpLocal(spark, rows.map(r => (r.getLong(0), r.getLong(1))),
-          dims, iterations, iterationWeights, salt))
+    if (placed.count * dims * iterations <= 512000000L)
+      LocalGraph.of(placed).foreach(g =>
+        return fastRpLocal(spark, g, dims, iterations, iterationWeights, salt))
     val coin = conv(substring(md5(concat_ws(":", lit(salt),
       col("node").cast("string"), col("dim").cast("string"))), 1, 8), 16, 10)
       .cast("long")
@@ -2770,12 +2635,14 @@ object Graph {
     var swPath: String = null
     if (e0.count == 0L) // empty graph; its (empty) table backs the plan
       return e.select(col("src").as("node"), col("src").as("community"))
-    val m2 = e0.rows.map(_.map(_.getLong(2)).sum * 2L)
-      .getOrElse(e0.metrics("m2").asInstanceOf[Long]) // 2m
+    val g0 = LocalGraph.of(e0)
+    val m2 = g0.map(g => Iterator.range(0, g.m).map(g.long(_, 2)).sum * 2L)
+      .orElse(e0.metrics.get("m2").map(_.asInstanceOf[Long]))
+      .getOrElse(e.select(sum(col("w")) * 2L).head().getLong(0)) // 2m; pinned, ids not Long
     // one phase of half-sweep local moves over (cross-edges e, self
     // mass sw); returns the phase's label table (node → community).
-    // `eRows`/`swRows` are the two inputs' pinned rows (None when
-    // Pin spilled them): when both are pinned the phase runs
+    // `g` is the two inputs' [[LocalGraph]] (None when Pin spilled
+    // either): when both are pinned the phase runs
     // as a driver-local sweep loop — the [[Corpus.connectedComponents]]
     // union-find switchover, and exactly what production Louvain does
     // once contraction shrinks the graph (level 2+ graphs are
@@ -2787,12 +2654,8 @@ object Graph {
     // enforced. Long-typed node ids only; anything else (or a frame
     // past the Pin gate) takes the distributed scratch-table loop,
     // which reads a pinned table as a local relation.
-    def phase(e: DataFrame, sw: DataFrame, eRows: Option[Array[Row]],
-        swRows: Option[Array[Row]]): (DataFrame, String) = {
-      louvainLocalPhase(e, eRows, swRows, m2, maxRounds) match {
-        case Some(labels) => return (labels, null)
-        case None =>
-      }
+    def phase(e: DataFrame, sw: DataFrame, g: Option[LocalGraph]): (DataFrame, String) = {
+      g.foreach(g => return (louvainLocalPhase(spark, g, m2, maxRounds), null))
       val (adj, adjPath) = Scratch.materializeAt(
         e.select(col("src").as("n"), col("dst").as("x"), col("w"))
           .union(e.select(col("dst").as("n"), col("src").as("x"), col("w"))),
@@ -2913,7 +2776,7 @@ object Graph {
       (labels, labelsPath)
     }
     // level 1
-    var (labels, labelsPath) = phase(e, sw, e0.rows, Some(Array.empty[Row]))
+    var (labels, labelsPath) = phase(e, sw, g0)
     var (map, mapPath) = Scratch.materializeAt(
       labels.select(col("node"), col("label").as("community")), "louvain_map")
     Scratch.drop(spark, labelsPath)
@@ -2945,7 +2808,7 @@ object Graph {
       Scratch.drop(spark, swPath)
       e = e2.df; ePath = e2.path
       sw = sw2.df; swPath = sw2.path
-      val (l2, l2Path) = phase(e, sw, e2.rows, sw2.rows)
+      val (l2, l2Path) = phase(e, sw, LocalGraph.of(e2, Some(sw2)))
       val (map2, map2Path) = Scratch.materializeAt(
         map.join(
           l2.select(col("node").as("community_prev"),
@@ -2962,89 +2825,84 @@ object Graph {
     map
   }
 
-  /** Driver-local rendition of one [[louvain]] phase over the pinned
-    * rows of its edge (src, dst, w) and self-mass (node, selfw) tables,
-    * as [[graft.ops.Pin.place]] placed them (None when either spilled,
-    * or for non-Long ids). Replays the distributed phase exactly:
-    * identity start, rounds of two snapshot half-sweeps
-    * (odd ids then even ids, moves computed against the half-sweep's
-    * INPUT labels), gain = m2·k_{i,C} − k_i·(Σtot(C) − [C=C₀]·k_i) as
-    * exact BigInt (⊇ the distributed DECIMAL(38,0)), ties to the
-    * smallest community id, rounds accepted only while the 4m²-scaled
-    * integer modularity strictly increases. All fold orders are
-    * commutative integer sums, so map iteration order cannot leak into
-    * the result — value-identical to the scratch-table loop by
-    * construction (GraphAnalyticsSpec and GraphLawsSpec run both paths
-    * differentially). */
-  private def louvainLocalPhase(e: DataFrame, eRows: Option[Array[Row]],
-      swRows: Option[Array[Row]], m2: Long, maxRounds: Int): Option[DataFrame] = {
-    import scala.collection.mutable
-    if (e.schema("src").dataType != org.apache.spark.sql.types.LongType)
-      return None
-    val collected = for (es <- eRows; ss <- swRows) yield (es, ss)
-    if (collected.isEmpty) return None
-    val spark = e.sparkSession
-    val edgeRows = collected.get._1
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val selfw = mutable.LongMap.empty[Long]
-    collected.get._2.foreach(r => selfw(r.getLong(0)) = r.getLong(1))
-    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long)]]
-    val kw = mutable.LongMap.empty[Long]
-    for ((s, d, w) <- edgeRows) {
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((d, w))
-      adj.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += ((s, w))
-      kw(s) = kw.getOrElse(s, 0L) + w
-      kw(d) = kw.getOrElse(d, 0L) + w
-    }
-    val nodes = (adj.keysIterator ++ selfw.keysIterator).toArray.distinct
-    val ki = mutable.LongMap.empty[Long]
-    nodes.foreach(n =>
-      ki(n) = kw.getOrElse(n, 0L) + 2L * selfw.getOrElse(n, 0L))
+  /** Driver-local rendition of one [[louvain]] phase over the
+    * [[LocalGraph]] of its pinned edge (src, dst, w) table, whose vertex
+    * frame, when given, is the pinned self-mass (node, selfw) table.
+    * Replays the distributed phase exactly: identity start, rounds of
+    * two snapshot half-sweeps (odd ids then even ids, moves computed
+    * against the half-sweep's INPUT labels), gain
+    * = m2·k_{i,C} − k_i·(Σtot(C) − [C=C₀]·k_i) as exact BigInt (⊇ the
+    * distributed DECIMAL(38,0)), ties to the smallest community id,
+    * rounds accepted only while the 4m²-scaled integer modularity
+    * strictly increases. A community is a node id, kept as the index of
+    * its node; every fold is a commutative integer sum, so vertex order
+    * cannot leak into the result — value-identical to the scratch-table
+    * loop by construction (GraphAnalyticsSpec and GraphLawsSpec run both
+    * paths differentially). */
+  private def louvainLocalPhase(spark: org.apache.spark.sql.SparkSession, g: LocalGraph,
+      m2: Long, maxRounds: Int): DataFrame = {
+    val (n, adj) = (g.n, g.both)
+    val w = Array.tabulate(g.m)(g.long(_, 2))
+    val selfw = g.vertexLongs(1)
+    // k_i: incident edge weight plus twice the self-loop mass
+    val ki = Array.tabulate(n)(v => 2L * selfw(v))
+    var e = 0
+    while (e < g.m) { ki(g.src(e)) += w(e); ki(g.dst(e)) += w(e); e += 1 }
     val m2b = BigInt(m2)
-    def halfSweep(labels: mutable.LongMap[Long], par: Long)
-        : mutable.LongMap[Long] = {
-      val tot = mutable.LongMap.empty[BigInt]
-      nodes.foreach { n =>
-        val c = labels(n); tot(c) = tot.getOrElse(c, BigInt(0)) + ki(n) }
+    // Σ over each community's members (totals stay under m2, a Long)
+    def mass(labels: Array[Int]): Array[Long] = {
+      val tot = new Array[Long](n)
+      var v = 0
+      while (v < n) { tot(labels(v)) += ki(v); v += 1 }
+      tot
+    }
+    val kic = new Array[Long](n)
+    val seen = Array.fill(n)(-1) // the node whose candidates `kic(c)` holds
+    val cands = new Array[Int](adj.maxDegree + 1)
+    def halfSweep(labels: Array[Int], par: Long): Array[Int] = {
+      val tot = mass(labels)
       val out = labels.clone()
-      nodes.foreach { n =>
-        if (java.lang.Math.floorMod(n, 2L) == par) {
-          val c0 = labels(n)
-          val cand = mutable.LongMap.empty[Long]
-          cand(c0) = 0L // the stay candidate (gain 0 after self-removal)
-          adj.get(n).foreach(_.foreach { case (x, w) =>
-            val cx = labels(x); cand(cx) = cand.getOrElse(cx, 0L) + w })
-          var bestC = c0
-          var bestG: BigInt = null
-          cand.foreach { case (c, kic) =>
-            val g = m2b * kic - BigInt(ki(n)) *
-              (tot.getOrElse(c, BigInt(0)) -
-                (if (c == c0) BigInt(ki(n)) else BigInt(0)))
-            if (bestG == null || g > bestG || (g == bestG && c < bestC)) {
-              bestG = g; bestC = c
-            }
-          }
-          out(n) = bestC
+      for (v <- 0 until n if java.lang.Math.floorMod(g.ids(v), 2L) == par) {
+        val c0 = labels(v)
+        // the stay candidate first (gain 0 after self-removal)
+        seen(c0) = v; kic(c0) = 0L; cands(0) = c0
+        var k = 1
+        var i = adj.offsets(v)
+        while (i < adj.offsets(v + 1)) {
+          val cx = labels(adj.targets(i))
+          if (seen(cx) != v) { seen(cx) = v; kic(cx) = 0L; cands(k) = cx; k += 1 }
+          kic(cx) += w(adj.edges(i))
+          i += 1
         }
+        var bestC = c0
+        var bestG: BigInt = null
+        while (k > 0) {
+          k -= 1
+          val c = cands(k)
+          val gain = m2b * kic(c) - BigInt(ki(v)) * (tot(c) - (if (c == c0) ki(v) else 0L))
+          if (bestG == null || gain > bestG || (gain == bestG && g.ids(c) < g.ids(bestC))) {
+            bestG = gain; bestC = c
+          }
+        }
+        out(v) = bestC
       }
       out
     }
-    def score(labels: mutable.LongMap[Long]): BigInt = {
-      val dC = mutable.LongMap.empty[BigInt]
-      nodes.foreach { n =>
-        val c = labels(n); dC(c) = dC.getOrElse(c, BigInt(0)) + ki(n) }
+    def score(labels: Array[Int]): BigInt = {
+      val dC = mass(labels)
       var s = BigInt(0)
-      nodes.foreach { n =>
+      for (v <- 0 until n) {
         var wIntra = 0L
-        adj.get(n).foreach(_.foreach { case (x, w) =>
-          if (labels(x) == labels(n)) wIntra += w })
-        s += m2b * wIntra + 2 * m2b * BigInt(selfw.getOrElse(n, 0L)) -
-          BigInt(ki(n)) * dC(labels(n))
+        var i = adj.offsets(v)
+        while (i < adj.offsets(v + 1)) {
+          if (labels(adj.targets(i)) == labels(v)) wIntra += w(adj.edges(i))
+          i += 1
+        }
+        s += m2b * wIntra + 2 * m2b * BigInt(selfw(v)) - BigInt(ki(v)) * dC(labels(v))
       }
       s
     }
-    var labels = {
-      val m = mutable.LongMap.empty[Long]; nodes.foreach(n => m(n) = n); m }
+    var labels = Array.tabulate(n)(v => v)
     var s = score(labels)
     var round = 1
     var improving = true
@@ -3054,169 +2912,163 @@ object Graph {
       if (s2 > s) { labels = h2; s = s2; round += 1 }
       else improving = false
     }
-    Some(longPairFrame(spark, nodes.sorted.map(n => (n, labels(n))).toSeq,
-      "node", "label"))
-  }
-
-  /** The (src, dst) pairs of a Long-id edge frame that
-    * [[graft.ops.Pin.place]] pinned, else None (a spilled frame or
-    * other id types keep the distributed loop). */
-  private def localEdgePairs(e: graft.ops.Pin.Placed): Option[Array[(Long, Long)]] = {
-    val schema = e.df.schema
-    if (schema("src").dataType != org.apache.spark.sql.types.LongType) None
-    else e.rows.map(_.map(r =>
-      (r.getLong(schema.fieldIndex("src")), r.getLong(schema.fieldIndex("dst")))))
-  }
-
-  private def longPairFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[(Long, Long)],
-      c1: String, c2: String): DataFrame = {
-    val jrows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(rows.map(r =>
-        org.apache.spark.sql.Row(r._1, r._2)): _*)
-    spark.createDataFrame(jrows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(c1,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(c2,
-        org.apache.spark.sql.types.LongType, nullable = false))))
-  }
-
-  /** Driver-local SCC (iterative Tarjan) — reachable only under the
-    * observed edge gate. The OUTPUT is canonical (every node labeled
-    * with its strongly connected component's minimum member id), so any
-    * correct SCC algorithm reproduces the distributed FW-BW result
-    * exactly; the sf0.01 oracle gate and the differential spec both
-    * enforce it. */
-  private def sccLocal(edgeRows: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    import scala.collection.mutable
-    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-    val nodesSet = mutable.LongMap.empty[Unit]
-    for ((s, d) <- edgeRows) {
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-      nodesSet(s) = (); nodesSet(d) = ()
+    LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("label", LongType, nullable = false))), n) { (out, v) =>
+      out.write(0, g.ids(v))
+      out.write(1, g.ids(labels(v)))
     }
-    val nodes = nodesSet.keys.toArray
-    val indexOf = mutable.LongMap.empty[Int]
-    val lowOf = mutable.LongMap.empty[Int]
-    val onStk = mutable.HashSet.empty[Long]
-    val stk = mutable.ArrayBuffer.empty[Long]
+  }
+
+  /** Driver-local SCC (iterative Tarjan) for [[stronglyConnectedComponents]]
+    * when [[graft.ops.Pin.place]] pins its edges. The OUTPUT is canonical
+    * (every node labeled with its strongly connected component's minimum
+    * member id), so any correct SCC algorithm reproduces the distributed
+    * FW-BW result exactly; the sf0.01 oracle gate and the differential
+    * spec both enforce it. */
+  private def sccLocal(spark: org.apache.spark.sql.SparkSession, g: LocalGraph): DataFrame = {
+    val (n, adj) = (g.n, g.out)
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val onStk = new Array[Boolean](n)
+    val stk = new Array[Int](n)
+    var sp = 0
+    // the DFS path: each frame's vertex and its next out slot
+    val frame, slot = new Array[Int](n)
+    var top = 0
+    val comp = new Array[Long](n)
     var counter = 0
-    val out = mutable.ArrayBuffer.empty[(Long, Long)]
-    val empty = mutable.ArrayBuffer.empty[Long]
-    for (root <- nodes if !indexOf.contains(root)) {
-      val dfs = mutable.ArrayBuffer.empty[Array[Long]] // [node, childIdx]
-      def push(v: Long): Unit = {
-        indexOf(v) = counter; lowOf(v) = counter; counter += 1
-        stk += v; onStk += v; dfs += Array(v, 0L)
-      }
+    def push(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stk(sp) = v; sp += 1; onStk(v) = true
+      frame(top) = v; slot(top) = adj.offsets(v); top += 1
+    }
+    for (root <- 0 until n if index(root) < 0) {
       push(root)
-      while (dfs.nonEmpty) {
-        val fr = dfs.last
-        val v = fr(0)
-        val nbrs = adj.getOrElse(v, empty)
-        if (fr(1) < nbrs.length) {
-          val w = nbrs(fr(1).toInt)
-          fr(1) += 1
-          if (!indexOf.contains(w)) push(w)
-          else if (onStk(w)) lowOf(v) = math.min(lowOf(v), indexOf(w))
+      while (top > 0) {
+        val v = frame(top - 1)
+        if (slot(top - 1) < adj.offsets(v + 1)) {
+          val w = adj.targets(slot(top - 1))
+          slot(top - 1) += 1
+          if (index(w) < 0) push(w)
+          else if (onStk(w)) low(v) = math.min(low(v), index(w))
         } else {
-          dfs.remove(dfs.length - 1)
-          if (dfs.nonEmpty) {
-            val p = dfs.last(0)
-            lowOf(p) = math.min(lowOf(p), lowOf(v))
-          }
-          if (lowOf(v) == indexOf(v)) {
-            val members = mutable.ArrayBuffer.empty[Long]
-            var w = 0L
-            do {
-              w = stk.remove(stk.length - 1); onStk -= w; members += w
-            } while (w != v)
-            val m = members.min
-            members.foreach(x => out += ((x, m)))
+          top -= 1
+          if (top > 0) low(frame(top - 1)) = math.min(low(frame(top - 1)), low(v))
+          if (low(v) == index(v)) {
+            var lo = sp
+            do { lo -= 1; onStk(stk(lo)) = false } while (stk(lo) != v)
+            val min = (lo until sp).map(i => g.ids(stk(i))).min
+            (lo until sp).foreach(i => comp(stk(i)) = min)
+            sp = lo
           }
         }
       }
     }
-    out.toSeq
+    LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("scc_id", LongType, nullable = false))), n) { (w, v) =>
+      w.write(0, g.ids(v))
+      w.write(1, comp(v))
+    }
   }
 
-  /** Driver-local replay of the [[kTruss]] peel — identical rounds:
-    * per-edge support = the triangle count |N(u)∩N(v)| over the
-    * surviving canonical edges, edges under `minSup` peel, same
-    * maxRounds/convergence contract, final (src, dst, support) readout
-    * (support 0 for triangle-less survivors — the left-join coalesce).
-    * All-integer, value-exact against the distributed loop. */
-  private def kTrussLocal(
-      canonical: Array[(Long, Long)], minSup: Long, maxRounds: Int)
-      : Seq[(Long, Long, Long)] = {
-    import scala.collection.mutable
-    def supportOf(es: Array[(Long, Long)]): mutable.Map[(Long, Long), Long] = {
-      val adj = mutable.LongMap.empty[mutable.Set[Long]]
-      es.foreach { case (s, d) =>
-        adj.getOrElseUpdate(s, mutable.Set.empty) += d
-        adj.getOrElseUpdate(d, mutable.Set.empty) += s
+  /** Driver-local replay of the [[kTruss]] peel over the canonical
+    * edges `g` — identical rounds: per-edge support = the triangle count
+    * |N(u)∩N(v)| over the surviving edges, edges under `minSup` peel,
+    * same maxRounds/convergence contract, final (src, dst, support)
+    * readout (support 0 for triangle-less survivors — the left-join
+    * coalesce). All-integer, value-exact against the distributed loop. */
+  private def kTrussLocal(spark: org.apache.spark.sql.SparkSession, g: LocalGraph,
+      minSup: Long, maxRounds: Int): DataFrame = {
+    val (n, adj) = (g.n, g.both)
+    // each triangle is listed once, from its lowest corner under the
+    // (degree, index) order, so a node scans only higher neighbours
+    val deg = Array.tabulate(n)(v => adj.offsets(v + 1) - adj.offsets(v))
+    def above(u: Int, v: Int) = deg(v) > deg(u) || (deg(v) == deg(u) && v > u)
+    val alive = Array.fill(g.m)(true)
+    val sup = new Array[Long](g.m)
+    val via = Array.fill(n)(-1) // via(x): the surviving edge u–x while u is scanned
+    def support(): Unit = {
+      java.util.Arrays.fill(sup, 0L)
+      for (u <- 0 until n) {
+        def live(v: Int)(f: Int => Unit): Unit = {
+          var i = adj.offsets(v)
+          while (i < adj.offsets(v + 1)) { if (alive(adj.edges(i))) f(i); i += 1 }
+        }
+        live(u)(i => via(adj.targets(i)) = adj.edges(i))
+        live(u) { i =>
+          val v = adj.targets(i)
+          if (above(u, v)) live(v) { j =>
+            val x = adj.targets(j)
+            if (above(v, x) && via(x) >= 0) {
+              sup(adj.edges(i)) += 1L; sup(adj.edges(j)) += 1L; sup(via(x)) += 1L
+            }
+          }
+        }
+        live(u)(i => via(adj.targets(i)) = -1)
       }
-      val sup = mutable.Map.empty[(Long, Long), Long]
-      es.foreach { case (s, d) =>
-        val (a, b) =
-          if (adj(s).size <= adj(d).size) (adj(s), adj(d)) else (adj(d), adj(s))
-        var c = 0L
-        a.foreach(w => if (b.contains(w)) c += 1L)
-        sup((s, d)) = c
-      }
-      sup
     }
-    var edges = canonical
-    var n = edges.length.toLong
+    var count = g.m.toLong
     var rounds = 0
-    var converged = n == 0L
+    var converged = count == 0L
     while (!converged && rounds < maxRounds) {
-      val sup = supportOf(edges)
-      val e2 = edges.filter(e => sup(e) >= minSup)
-      val n2 = e2.length.toLong
-      edges = e2
-      converged = n2 == n || n2 == 0L
-      n = n2
+      support()
+      for (e <- 0 until g.m if alive(e) && sup(e) < minSup) alive(e) = false
+      val left = alive.count(identity).toLong
+      converged = left == count || left == 0L
+      count = left
       rounds += 1
     }
-    val sup = supportOf(edges)
-    edges.toSeq.map { case (s, d) => (s, d, sup((s, d))) }
+    support()
+    val kept = (0 until g.m).filter(alive)
+    LocalGraph.frame(spark, StructType(Seq(StructField("src", LongType, nullable = false),
+        StructField("dst", LongType, nullable = false),
+        StructField("support", LongType, nullable = false))), kept.length) { (w, i) =>
+      w.write(0, g.ids(g.src(kept(i))))
+      w.write(1, g.ids(g.dst(kept(i))))
+      w.write(2, sup(kept(i)))
+    }
   }
 
-  /** Driver-local replay of [[maximalMatching]]'s synchronous rounds:
-    * round r matches every edge that is the minimum incident edge of
-    * BOTH endpoints under the canonical (src, dst) order, peels the
-    * endpoints, repeats; a bound-exhausted residual surfaces with null
-    * round exactly like the distributed loop. */
-  private def matchingLocal(
-      canonical: Array[(Long, Long)], maxRounds: Int)
-      : Seq[(Long, Long, Option[Long])] = {
-    import scala.collection.mutable
-    var edges = canonical.toVector
-    val out = mutable.ArrayBuffer.empty[(Long, Long, Option[Long])]
-    var round = 0
+  /** Driver-local replay of [[maximalMatching]]'s synchronous rounds
+    * over the canonical edges `g`: round r matches every edge that is
+    * the minimum incident edge of BOTH endpoints under the canonical
+    * (src, dst) id order, peels the endpoints, repeats; a
+    * bound-exhausted residual surfaces with null round exactly like the
+    * distributed loop. */
+  private def matchingLocal(spark: org.apache.spark.sql.SparkSession, g: LocalGraph,
+      maxRounds: Int): DataFrame = {
+    def less(a: Int, b: Int): Boolean = {
+      val (sa, sb) = (g.ids(g.src(a)), g.ids(g.src(b)))
+      sa < sb || (sa == sb && g.ids(g.dst(a)) < g.ids(g.dst(b)))
+    }
+    val round = Array.fill(g.m)(-1L)
+    val matched = new Array[Boolean](g.n)
+    val minOf = new Array[Int](g.n)
+    var edges = Array.range(0, g.m)
+    var r = 0
     var done = false
-    val ord = Ordering.Tuple2[Long, Long]
-    while (!done && round < maxRounds && edges.nonEmpty) {
-      val minOf = mutable.LongMap.empty[(Long, Long)]
-      for (e <- edges; n <- Seq(e._1, e._2)) {
-        val cur = minOf.get(n)
-        if (cur.isEmpty || ord.lt(e, cur.get)) minOf(n) = e
-      }
-      val wave = edges.filter(e => minOf(e._1) == e && minOf(e._2) == e)
+    while (!done && r < maxRounds && edges.nonEmpty) {
+      java.util.Arrays.fill(minOf, -1)
+      for (e <- edges; v <- Array(g.src(e), g.dst(e)))
+        if (minOf(v) < 0 || less(e, minOf(v))) minOf(v) = e
+      val wave = edges.filter(e => minOf(g.src(e)) == e && minOf(g.dst(e)) == e)
       if (wave.isEmpty) done = true
       else {
-        wave.foreach { case (s, d) => out += ((s, d, Some(round.toLong))) }
-        val matchedNodes = wave.flatMap(e => Seq(e._1, e._2)).toSet
-        edges = edges.filterNot(e =>
-          matchedNodes(e._1) || matchedNodes(e._2))
-        round += 1
+        wave.foreach { e => round(e) = r; matched(g.src(e)) = true; matched(g.dst(e)) = true }
+        edges = edges.filterNot(e => matched(g.src(e)) || matched(g.dst(e)))
+        r += 1
       }
     }
-    if (round == maxRounds && edges.nonEmpty)
-      edges.foreach { case (s, d) => out += ((s, d, None)) }
-    out.toSeq
+    // matched edges, then a bound-exhausted residual with null round
+    val out = (0 until g.m).filter(round(_) >= 0) ++ (if (r == maxRounds) edges else Nil)
+    LocalGraph.frame(spark, StructType(Seq(StructField("src", LongType, nullable = false),
+        StructField("dst", LongType, nullable = false),
+        StructField("round", LongType))), out.length) { (w, i) =>
+      val e = out(i)
+      w.write(0, g.ids(g.src(e)))
+      w.write(1, g.ids(g.dst(e)))
+      if (round(e) >= 0) w.write(2, round(e)) else w.setNullAt(2)
+    }
   }
 
   /**
@@ -3776,14 +3628,15 @@ object Graph {
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val e0 = canonicalEdges(edges)
     val adjP @ graft.ops.Pin.Placed(adj, _, adjPath, _) = symAdjacency(edges, "katz")
-    tryLocalPairs(adjP).foreach { case (ids, ladj) =>
+    LocalGraph.of(adjP).foreach { g =>
       // driver-local replay: same decimal contribution rounds; every
       // node keeps a score each round (the left-join semantics —
       // no-contribution nodes take coalesce(·, 0.0))
+      val ids = g.ids
       val score = Array.fill(ids.length)(1.0d)
       val all = Array.fill(ids.length)(true)
       for (_ <- 1 to iters) {
-        val (contrib, _) = localContribRound(ladj, score, all)
+        val (contrib, _) = localContribRound(g.out, score, all)
         var v = 0
         while (v < ids.length) {
           val c = if (contrib(v) == null) 0.0d else contrib(v).doubleValue
@@ -3791,16 +3644,11 @@ object Graph {
           v += 1
         }
       }
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(ids.indices.map { v =>
-          org.apache.spark.sql.Row(ids(v), roundD(score(v), 6))
-        }: _*)
-      return spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("katz",
-            org.apache.spark.sql.types.DoubleType, nullable = true))))
+      return LocalGraph.frame(spark, StructType(Seq(StructField("node", LongType, nullable = false),
+          StructField("katz", DoubleType))), g.n) { (w, v) =>
+        w.write(0, ids(v))
+        w.write(1, roundD(score(v), 6))
+      }
     }
     val nodes = adj.select(col("src").as("node")).distinct()
     var scores = nodes.withColumn("score", lit(1.0d))

@@ -57,7 +57,7 @@ object Pin {
     * row `count`, and the caller's `metrics` observed on the spill
     * write (empty when pinned: read them off [[rows]] instead).
     * `pinned` holds the collected UnsafeRows (null when spilled), which
-    * [[Superstep]]'s driver executor reads as primitive longs. */
+    * [[LocalGraph]] reads as primitive longs. */
   final case class Placed(df: DataFrame, count: Long, path: String,
       metrics: Map[String, Any])(private[ops] val pinned: Array[InternalRow]) {
     /** The pinned rows, or None when the frame spilled. */

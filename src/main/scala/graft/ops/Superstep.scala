@@ -1,13 +1,7 @@
 package graft.ops
 
-import scala.collection.immutable.ArraySeq
-
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftPlanApi, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions.{array_sort, coalesce, col, collect_set, count, lit, max,
   monotonically_increasing_id, sum, when}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
@@ -29,9 +23,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
  * no vertex, or after `maxRounds` rounds.
  *
  * [[run]] places the edge frame with [[Pin.place]], and the placement
- * picks the executor. Pinned edges run on the driver over a CSR of
- * primitive longs read from the pinned UnsafeRows; the result is a
- * local relation. Spilled edges run Pregelix's full-round plan: per
+ * picks the executor. Pinned edges run on the driver over their
+ * [[LocalGraph]]; the result is a local relation. Spilled edges run Pregelix's full-round plan: per
  * round, the edges ⋈ the senders' messages, unioned with the vertex
  * table into one grouped aggregate (one shuffle), and a new vertex
  * table, holding each vertex's next sends, written to scratch with the
@@ -76,46 +69,32 @@ final case class Superstep[M](
 
   private def runLongs(edges: DataFrame, maxRounds: Int, tag: String): DataFrame = {
     val placed = Pin.place(edges, s"${tag}_edges")
-    Option(placed.pinned) match {
-      case Some(rows) => onDriver(placed.df.sparkSession, rows, maxRounds)
+    LocalGraph.of(placed) match {
+      case Some(g) => onDriver(placed.df.sparkSession, g, maxRounds)
       case None =>
         try distributed(placed.df, maxRounds, tag)
         finally Scratch.drop(placed.df.sparkSession, placed.path)
     }
   }
 
-  private def onDriver(spark: SparkSession, rows: Array[InternalRow],
-      maxRounds: Int): DataFrame = {
-    // a vertex is the index of its id in first-seen order
-    val index = new scala.collection.mutable.LongMap[Int]()
-    val idList = new scala.collection.mutable.ArrayBuilder.ofLong
-    def vertex(id: Long): Int = index.getOrElseUpdate(id, { idList += id; index.size })
-    val s, d = new Array[Int](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      s(i) = vertex(rows(i).getLong(0))
-      d(i) = vertex(rows(i).getLong(1))
-      i += 1
-    }
-    val ids = idList.result()
-    val n = ids.length
+  private def onDriver(spark: SparkSession, g: LocalGraph, maxRounds: Int): DataFrame = {
     // senders per receiver: along out edges a dst hears its srcs, along
     // in edges a src hears its dsts
-    val fromOut = Csr(d, s, n)
-    val fromIn = if (direction == Both) Csr(s, d, n) else null
+    val fromOut = g.in
+    val fromIn = if (direction == Both) g.out else null
     val buf = new Array[Long](fromOut.maxDegree + (if (fromIn == null) 0 else fromIn.maxDegree))
-    var state = Array.fill(n)(init)
+    var state = Array.fill(g.n)(init)
     var round = 1
     var changed = true
     while (changed && round <= maxRounds) {
       val out = state.map(send(_, true))
       val in = if (fromIn == null) null else state.map(send(_, false))
-      val next = new Array[Long](n)
+      val next = new Array[Long](g.n)
       changed = false
       var v = 0
-      while (v < n) {
-        var len = fromOut.gather(v, out, buf, 0)
-        if (fromIn != null) len = fromIn.gather(v, in, buf, len)
+      while (v < g.n) {
+        var len = gather(fromOut, v, out, buf, 0)
+        if (fromIn != null) len = gather(fromIn, v, in, buf, len)
         next(v) = update(state(v), combine.reduce(buf, len), round)
         changed ||= next(v) != state(v)
         v += 1
@@ -123,16 +102,7 @@ final case class Superstep[M](
       state = next
       round += 1
     }
-    val writer = new UnsafeRowWriter(2)
-    val out = Array.tabulate[InternalRow](n) { v =>
-      writer.reset()
-      writer.zeroOutNullBytes()
-      writer.write(0, ids(v))
-      writer.write(1, state(v))
-      writer.getRow.copy()
-    }
-    GraftPlanApi.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema),
-      ArraySeq.unsafeWrapArray(out)))
+    LocalGraph.frame(spark, schema, g.n) { (w, v) => w.write(0, g.ids(v)); w.write(1, state(v)) }
   }
 
   private def distributed(edges: DataFrame, maxRounds: Int, tag: String): DataFrame = {
@@ -226,42 +196,17 @@ object Superstep {
   private val longs5 = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong,
     Encoders.scalaLong, Encoders.scalaLong)
 
-  /** Compressed rows: the senders heard by each receiver. */
-  private final case class Csr(offsets: Array[Int], senders: Array[Int]) {
-    def maxDegree: Int = {
-      var max, v = 0
-      while (v + 1 < offsets.length) { max = math.max(max, offsets(v + 1) - offsets(v)); v += 1 }
-      max
+  /** Append the non-silent messages `v` hears over `senders` to `buf`
+    * from `len`; the new length. */
+  private def gather(senders: LocalGraph.Csr, v: Int, sent: Array[Long], buf: Array[Long],
+      len: Int): Int = {
+    var n = len
+    var i = senders.offsets(v)
+    while (i < senders.offsets(v + 1)) {
+      val m = sent(senders.targets(i))
+      if (m != Silent) { buf(n) = m; n += 1 }
+      i += 1
     }
-
-    /** Append `v`'s non-silent messages to `buf` from `len`; the new length. */
-    def gather(v: Int, sent: Array[Long], buf: Array[Long], len: Int): Int = {
-      var n = len
-      var i = offsets(v)
-      while (i < offsets(v + 1)) {
-        val m = sent(senders(i))
-        if (m != Silent) { buf(n) = m; n += 1 }
-        i += 1
-      }
-      n
-    }
-  }
-
-  private object Csr {
-    def apply(receiver: Array[Int], sender: Array[Int], n: Int): Csr = {
-      val offsets = new Array[Int](n + 1)
-      receiver.foreach(r => offsets(r + 1) += 1)
-      var v = 0
-      while (v < n) { offsets(v + 1) += offsets(v); v += 1 }
-      val fill = offsets.clone()
-      val senders = new Array[Int](sender.length)
-      var i = 0
-      while (i < sender.length) {
-        senders(fill(receiver(i))) = sender(i)
-        fill(receiver(i)) += 1
-        i += 1
-      }
-      Csr(offsets, senders)
-    }
+    n
   }
 }

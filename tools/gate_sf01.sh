@@ -17,6 +17,13 @@
 # index) and ev_session_stream_replay (incremental-sessionize loop,
 # ~7 s at sf0.1 — the heaviest of the round-13 replay gates) joined
 # the tier.
+#
+# The replayed graph operators whose driver replays run on
+# ops.LocalGraph joined next: graph_scc, graph_matching,
+# graph_label_propagation, graph_lpa_weighted, graph_katz,
+# graph_toposort, graph_coloring and graph_louvain. Their DuckDB oracles
+# take 0.2-1.3 s each at sf0.1 (graph_scc 32.5 s), with 2 oracle threads,
+# so none is left out.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -24,10 +31,11 @@ TIER="corpus_prepare,corpus_prepare_classifier,corpus_prepare_mixed,corpus_prepa
 decontaminate,dedup_cdc_chunks,dedup_lsh_index_persisted,dedup_lsh_jaccard,\
 dedup_minhash_estimate,dedup_minhash_lsh,\
 dq_approx_distinct,dq_audit,emb_pca,ev_session_stream_replay,\
-graph_adamic_adar,graph_betweenness,graph_closeness,\
+graph_adamic_adar,graph_betweenness,graph_closeness,graph_coloring,\
 graph_common_neighbors,graph_conductance,graph_distance_distribution,graph_eigenvector,\
-graph_fastrp,graph_harmonic,graph_hits,graph_influence_max,graph_kcore,graph_ktruss,\
-graph_louvain2,graph_modularity,graph_node2vec_walks,graph_pagerank,sim_hnsw_topk,\
+graph_fastrp,graph_harmonic,graph_hits,graph_influence_max,graph_katz,graph_kcore,graph_ktruss,\
+graph_label_propagation,graph_louvain,graph_louvain2,graph_lpa_weighted,graph_matching,\
+graph_modularity,graph_node2vec_walks,graph_pagerank,graph_scc,graph_toposort,sim_hnsw_topk,\
 sim_ivfpq_persisted,sim_ivfpq_recall,sim_ivfpq_residual,sim_ivfpq_topk,sim_nsw_recall,\
 sim_nsw_topk,sim_pq_topk,stats_bootstrap,stats_permutation,text_textrank,\
 text_unigram_encode,text_winnow,tfidf_terms_salted"
