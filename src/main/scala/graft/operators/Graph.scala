@@ -1636,6 +1636,7 @@ object Graph {
         while (k > 0) {
           k -= 1
           val l = voted(k)
+          voter(l) = -1 // the next visit of v tallies l afresh
           val c = votes(l)
           if (c > mc || (c == mc && g.ids(l) < g.ids(next(v)))) { mc = c; next(v) = l }
         }
@@ -2620,9 +2621,9 @@ object Graph {
           .filter(col("w") > 0L)
     }
     val dec = "decimal(38,0)"
-    // 2m rides the edge table's spill as an Observation, or sums over
-    // its pinned rows (no separate driver aggregate): m2 is invariant
-    // across contractions
+    // 2m rides the edge table's spill as an Observation, or is one
+    // aggregate over its pinned local relation: m2 is invariant across
+    // contractions
     val e0 = graft.ops.Pin.place(e0raw.select(col("src"), col("dst"), col("w")),
       "louvain_edges", (sum(col("w")) * 2L).as("m2"))
     var (e, ePath) = (e0.df, e0.path)
@@ -2636,9 +2637,8 @@ object Graph {
     if (e0.count == 0L) // empty graph; its (empty) table backs the plan
       return e.select(col("src").as("node"), col("src").as("community"))
     val g0 = LocalGraph.of(e0)
-    val m2 = g0.map(g => Iterator.range(0, g.m).map(g.long(_, 2)).sum * 2L)
-      .orElse(e0.metrics.get("m2").map(_.asInstanceOf[Long]))
-      .getOrElse(e.select(sum(col("w")) * 2L).head().getLong(0)) // 2m; pinned, ids not Long
+    val m2 = e0.metrics.get("m2").fold(e.select(sum(col("w")) * 2L).head().getLong(0))(
+      _.asInstanceOf[Long])
     // one phase of half-sweep local moves over (cross-edges e, self
     // mass sw); returns the phase's label table (node → community).
     // `g` is the two inputs' [[LocalGraph]] (None when Pin spilled
@@ -2879,6 +2879,7 @@ object Graph {
         while (k > 0) {
           k -= 1
           val c = cands(k)
+          seen(c) = -1 // the next visit of v collects c afresh
           val gain = m2b * kic(c) - BigInt(ki(v)) * (tot(c) - (if (c == c0) ki(v) else 0L))
           if (bestG == null || gain > bestG || (gain == bestG && g.ids(c) < g.ids(bestC))) {
             bestG = gain; bestC = c

@@ -228,6 +228,33 @@ class GraphLawsSpec extends SparkTestBase {
     })
   }
 
+  test("property: weighted and unweighted LPA and weighted louvain replay " +
+      "the distributed loops on random weighted graphs") {
+    // the replays reuse per-label tallies across vertex visits, so a
+    // label a vertex tallied last in one round must count afresh in
+    // the next; rounds 1-4 let a stale tally carry over
+    def same(df: => org.apache.spark.sql.DataFrame) = {
+      val local = df.collect().map(_.toSeq).toSet
+      local == withConf("spark.graft.maxLocalEdges" -> "0")(df.collect().map(_.toSeq).toSet)
+    }
+    def agree(e: org.apache.spark.sql.DataFrame, rounds: Int): Boolean =
+      same(Graph.labelPropagation(e, rounds)) &&
+        same(Graph.labelPropagation(e, rounds, weightCol = Some("w"))) &&
+        same(Graph.louvain(e, maxRounds = rounds, weightCol = Some("w")))
+    // a weighted graph on which a stale tally changed the LPA replay's
+    // labels (vertex 6 sees labels 1 and 5 tie at weight 2 in round 3)
+    val fixed = Seq((1L, 2L, 3L), (1L, 4L, 10L), (4L, 5L, 20L), (3L, 6L, 2L),
+      (1L, 6L, 2L), (2L, 6L, 1L)).toDF("src", "dst", "w")
+    assert((1 to 4).forall(agree(fixed, _)))
+    val weighted = for {
+      es <- graphGen
+      ws <- Gen.listOfN(es.size, Gen.choose(1L, 4L))
+    } yield es.toSeq.zip(ws).map { case ((a, b), w) => (a, b, w) }
+    check(Prop.forAll(weighted, Gen.choose(1, 4)) { (es, rounds) =>
+      es.isEmpty || agree(es.toDF("src", "dst", "w"), rounds)
+    })
+  }
+
   test("property: each Superstep program gives the same states on the " +
       "driver and the distributed executor") {
     // the engine's differential: every ported program, on random

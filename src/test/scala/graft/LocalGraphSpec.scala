@@ -29,27 +29,28 @@ class LocalGraphSpec extends SparkTestBase {
       (g.ids(csr.targets(i)), (g.ids(g.src(e)), g.ids(g.dst(e)), g.double(e, 2)))
     }
 
-  test("property: out, in and both adjacency equal a brute-force adjacency") {
-    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40),
-      Prop.forAll(edgeGen) { es =>
-        val g = graph(es)
-        val firstSeen = es.flatMap(e => Seq(e._1, e._2)).distinct
-        g.ids.toSeq == firstSeen && g.m == es.length &&
-          firstSeen.forall(id => g.ids(g.indexOf(id)) == id) && g.indexOf(42L) == -1 &&
-          g.ids.indices.forall { v =>
-            val id = g.ids(v)
-            val out = es.filter(_._1 == id).map(e => (e._2, e))
-            val in = es.filter(_._2 == id).map(e => (e._1, e))
-            nbrs(g, g.out, v) == out && nbrs(g, g.in, v) == in &&
-              nbrs(g, g.both, v) == out ++ in
-          }
-      })
-    assert(r.passed, r.status.toString)
+  /** The graph's ids, edges and adjacency against brute force. */
+  private def matchesBruteForce(es: Seq[(Long, Long, Double)]): Boolean = {
+    val g = graph(es)
+    val firstSeen = es.flatMap(e => Seq(e._1, e._2)).distinct
+    g.ids.toSeq == firstSeen && g.m == es.length &&
+      firstSeen.forall(id => g.ids(g.indexOf(id)) == id) && g.indexOf(42L) == -1 &&
+      Seq(g.out, g.in, g.both).forall(_.offsets.length == g.n + 1) &&
+      g.out.maxDegree == g.ids.map(id => es.count(_._1 == id)).maxOption.getOrElse(0) &&
+      g.ids.indices.forall { v =>
+        val id = g.ids(v)
+        val out = es.filter(_._1 == id).map(e => (e._2, e))
+        val in = es.filter(_._2 == id).map(e => (e._1, e))
+        nbrs(g, g.out, v) == out && nbrs(g, g.in, v) == in &&
+          nbrs(g, g.both, v) == out ++ in
+      }
   }
 
-  test("the empty frame is the empty graph") {
-    val g = graph(Nil)
-    assert(g.n == 0 && g.m == 0 && g.out.maxDegree == 0 && g.in.offsets.toSeq == Seq(0))
+  test("property: out, in and both adjacency equal a brute-force adjacency") {
+    assert(matchesBruteForce(Nil)) // the empty frame is the empty graph
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40),
+      Prop.forAll(edgeGen)(matchesBruteForce))
+    assert(r.passed, r.status.toString)
   }
 
   test("a vertex frame adds its ids after the endpoints and reads per vertex") {
